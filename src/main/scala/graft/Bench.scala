@@ -1,5 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** The timing sweep: every registry query (or the `SPARK_GRAFT_BENCH_ONLY`
+  * prefixes) on `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_BENCH_REPS` reps each in
+  * one warm session, with cache hygiene between queries. Prints one compact
+  * JSON line to stdout and each query's raw rep times to stderr; a full
+  * sweep also writes `BENCH_SELF.json`.
+  */
 object Bench {
   /** Streaming-floor guard predicate, load-normalized (VERDICT r9 next-#1).
     *
@@ -35,16 +41,73 @@ object Bench {
         "check st* plans before shipping")
     else None
   }
+  /** One query's reps: every rep's wall seconds, plus the exception class
+    * of the first rep that threw. A failing rep is still timed, so the
+    * totals keep their shape, but the query is reported as failed instead
+    * of passing for a fast success.
+    */
+  private[graft] case class Reps(times: Seq[Double], failure: Option[String]) {
+    private lazy val sorted = times.sorted
+    def median: Double = sorted(sorted.size / 2)
+    def min: Double = sorted.head
+    def max: Double = sorted.last
+  }
+
+  private[graft] def timeReps(reps: Int)(body: => Unit): Reps = {
+    var failure: Option[String] = None
+    val times = Seq.fill(reps) {
+      val t0 = System.nanoTime()
+      try body
+      catch { case e: Throwable => if (failure.isEmpty) failure = Some(e.getClass.getName) }
+      (System.nanoTime() - t0) / 1e9
+    }
+    Reps(times, failure)
+  }
+
+  private def qmap(rs: Seq[(String, Reps)]): String =
+    rs.map { case (k, r) => "\"" + k + "\":" + r.median }.mkString("{", ",", "}")
+
+  private def failedMap(rs: Seq[(String, Reps)]): String =
+    rs.collect { case (k, Reps(_, Some(cls))) => "\"" + k + "\":\"" + cls + "\"" }
+      .mkString("{", ",", "}")
+
+  /** The compact stdout line. The driver records only the TAIL of stdout
+    * (~2 KB): a line carrying all per-query times is ~12 KB and gets
+    * truncated mid-JSON, so this one carries the total, the calibration,
+    * the failure count and the slowest queries (the ones whose deltas are
+    * signal); the full record lives in BENCH_SELF.json.
+    */
+  private[graft] def stdoutLine(results: Seq[(String, Reps)],
+      calibration: Reps, sfDir: String): String = {
+    val slowest = results.sortBy(-_._2.median).take(25).sortBy(_._1)
+    s"""{"metric":"total","value":${results.map(_._2.median).sum},"unit":"sec"""" +
+      s""","n_queries":${results.size},"failed":${results.count(_._2.failure.isDefined)}""" +
+      s""","calibration_sec":${calibration.median}""" +
+      s""","queries":${qmap(slowest)},"sf":"$sfDir"}"""
+  }
+
+  /** The full machine-readable record: all medians, per-query [min, max]
+    * across reps (so a round-over-round delta is judged against the
+    * measured rep spread, not guessed), and each failed query's exception
+    * class. The "sf" field records the dataset; totals compare only within
+    * an sf.
+    */
+  private[graft] def selfRecord(results: Seq[(String, Reps)], reps: Int,
+      stBlock: Double, calibration: Reps, sfDir: String): String = {
+    val spread = results.map { case (k, r) =>
+      "\"" + k + "\":[" + r.min + "," + r.max + "]" }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${results.map(_._2.median).sum},"unit":"sec"""" +
+      s""","n_queries":${results.size},"reps":$reps""" +
+      s""","st_block_sec":$stBlock""" +
+      s""","calibration_sec":${calibration.median}""" +
+      s""","calibration_spread":[${calibration.min},${calibration.max}]""" +
+      s""","queries":${qmap(results)},"spread":$spread""" +
+      s""","failed":${failedMap(results)},"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     // untimed warm-up: exercise scan/shuffle/window/join codegen paths once
     // so the first measured query isn't billed for one-time JVM and
     // whole-stage-codegen compilation (standard bench hygiene; no input
@@ -75,15 +138,7 @@ object Bench {
     // empty job, measured with the same rep protocol. Sub-second
     // round-over-round "regressions" can then be compared against the
     // session's ambient per-job overhead instead of read as plan changes.
-    def measure(body: => Unit): (Double, Double, Double) = {
-      val times = Seq.fill(reps) {
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (times(reps / 2), times.head, times.last)
-    }
-    val calibration = measure { spark.range(100).count() }
+    val calibration = timeReps(reps) { spark.range(100).count(); () }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .map { case (name, fn) =>
@@ -91,7 +146,10 @@ object Bench {
       // queries must be idempotent across repetitions (sinks overwrite,
       // graph updates drop+recreate). A non-idempotent query would silently
       // measure polluted state.
-      val m = measure { try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () } }
+      val r = timeReps(reps) { fn(spark, sfDir).count(); () }
+      System.err.println(s"""[bench] {"query":"$name","reps":[""" +
+        r.times.map(t => f"$t%.3f").mkString(",") + "]" +
+        r.failure.fold("")(cls => s""","failed":"$cls"""") + "}")
       // isolate queries from each other's debris: a query that caches (or a
       // leak we haven't found yet) must not tax every later query's median
       // with its memory pressure — measured up to 14x inflation on
@@ -105,49 +163,24 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       System.gc()
-      name -> m
+      name -> r
     }
-    def qmap(rs: Seq[(String, (Double, Double, Double))]): String =
-      rs.map { case (k, (med, _, _)) => "\"" + k + "\":" + med }
-        .mkString("{", ",", "}")
-    val total = results.map(_._2._1).sum
     // streaming-floor guard (VERDICT r8 next-#7, load-normalized per r9
     // next-#1 — see stGuardWarning above): flag an st-SPECIFIC regression
     // in-round, while the change that caused it is still in the diff,
     // without firing on shared-host weather that inflates the whole sweep.
     val stBlock = results.collect {
-      case (n, (med, _, _)) if n.startsWith("st") => med }.sum
+      case (n, r) if n.startsWith("st") => r.median }.sum
     if (only.isEmpty)
-      stGuardWarning(stBlock, total).foreach(System.err.println)
-    // The driver records only the TAIL of stdout (~2 KB): a line carrying
-    // all per-query times is ~12 KB and gets truncated mid-JSON — every
-    // prior round's bench artifact came back `parsed: null` for exactly
-    // this reason. So stdout gets a COMPACT, complete line (total +
-    // calibration + the slowest queries — the ones whose deltas are
-    // signal); the full per-query medians AND the min/max spread live in
-    // BENCH_SELF.json, committed with the repo.
-    val slowest = results.sortBy(-_._2._1).take(25).sortBy(_._1)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec"""" +
-      s""","n_queries":${results.size},"calibration_sec":${calibration._1}""" +
-      s""","queries":${qmap(slowest)},"sf":"$sfDir"}"""
-    println(line)
-    // full machine-readable record (sbt wraps stdout in [info]/[success]
-    // noise, and the compact stdout line drops the fast-query tail): all
-    // medians, plus per-query [min, max] across reps so a round-over-round
-    // delta can be judged against the measured rep spread, not guessed.
-    // The "sf" field records the dataset; totals compare only within an sf.
-    // a filtered dev run must not clobber the full-sweep record
+      stGuardWarning(stBlock, results.map(_._2.median).sum)
+        .foreach(System.err.println)
+    println(stdoutLine(results, calibration, sfDir))
+    // a filtered dev run must not clobber the full-sweep record (sbt wraps
+    // stdout in [info]/[success] noise, so the record is a file)
     if (only.isEmpty) {
-      val spread = results.map { case (k, (_, lo, hi)) =>
-        "\"" + k + "\":[" + lo + "," + hi + "]" }.mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec"""" +
-        s""","n_queries":${results.size},"reps":$reps""" +
-        s""","st_block_sec":$stBlock""" +
-        s""","calibration_sec":${calibration._1}""" +
-        s""","calibration_spread":[${calibration._2},${calibration._3}]""" +
-        s""","queries":${qmap(results)},"spread":$spread,"sf":"$sfDir"}"""
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_SELF.json"), full + "\n")
+        java.nio.file.Paths.get("BENCH_SELF.json"),
+        selfRecord(results, reps, stBlock, calibration, sfDir) + "\n")
       catch { case scala.util.control.NonFatal(_) => () }
     }
     spark.stop()

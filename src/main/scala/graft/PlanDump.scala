@@ -2,38 +2,58 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps `.explain("formatted")` for a named list of queries, one file per
-  * query — the before/after plan evidence for optimization rounds
-  * (plans/rNN/<query>_<tag>.txt). Unlike ExplainDump (the fixed headline
-  * EXPLAINS.md), this takes the query list and output names on the command
-  * line so the same binary can snapshot any slice of the registry:
+/** Dumps `.explain("formatted")` for a named list of queries, on a
+  * `local[4]` session (plan text records partition counts, so the width is
+  * fixed). Two output shapes:
   *
   *   runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
+  *     one file per query, `<outDir>/<query>_<tag>.txt` — the before/after
+  *     plan evidence of optimization rounds (plans/rNN/);
+  *   runMain graft.PlanDump <sfDir> <out.md> <q1,q2,...>
+  *     one markdown file with a `## <query>` section per query — EXPLAINS.md,
+  *     whose own `## ` headers are the list to regenerate it from.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.length != 3 && args.length != 4) {
+      System.err.println("usage: PlanDump <sfDir> <outDir> <tag> <q1,q2,...>" +
+        " | PlanDump <sfDir> <out.md> <q1,q2,...>")
+      sys.exit(2)
+    }
     val sfDir = args(0)
-    val outDir = Paths.get(args(1))
-    val tag = args(2)
-    val names = args(3).split(',').map(_.trim).filter(_.nonEmpty)
-    Files.createDirectories(outDir)
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
+    val names = args.last.split(',').map(_.trim).filter(_.nonEmpty)
+    val spark = Tables.session(cpus = 4)
+    // giant binary literals (e.g. tp21's ~256 KB embedded Bloom filter)
+    // print as megabyte hex strings — elide them; the plan SHAPE is the
+    // evidence, not the artifact bytes
+    val plans = names.iterator.map { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE so the printed plan is the executed one
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      name -> df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         .replaceAll("0x[0-9A-Fa-f]{257,}", "0x…<large binary literal elided>")
-      Files.writeString(outDir.resolve(s"${name}_$tag.txt"), plan)
-      println(s"[plandump] wrote ${name}_$tag.txt")
+    }
+    args match {
+      case Array(_, outDir, tag, _) =>
+        Files.createDirectories(Paths.get(outDir))
+        plans.foreach { case (name, plan) =>
+          Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan)
+          println(s"[plandump] wrote ${name}_$tag.txt")
+        }
+      case _ =>
+        val out = args(1)
+        val sb = new StringBuilder
+        sb.append("# EXPLAINS — formatted physical plans for headline queries\n\n")
+        sb.append(s"Generated against `$sfDir` by `graft.PlanDump`. Shows the\n")
+        sb.append("plan shapes the engine is designed around: pushed filters,\n")
+        sb.append("pruned scan schemas, broadcast joins, whole-stage codegen\n")
+        sb.append("(`[codegen id : N]`), and the native expressions.\n")
+        plans.foreach { case (name, plan) =>
+          sb.append(s"\n## $name\n\n```\n$plan```\n")
+        }
+        Files.writeString(Paths.get(out), sb.toString)
+        println(s"[plandump] wrote $out (${names.length} plans)")
     }
     spark.stop()
   }

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: per-JOB wall/shuffle attribution for one named query.
   * `runMain graft.ProfileOne <sfDir> <query> [reps]` — prints one line per
@@ -22,14 +21,7 @@ object ProfileOne {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stageToJob = mutable.HashMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {

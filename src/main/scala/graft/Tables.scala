@@ -38,10 +38,26 @@ object Tables {
     }
   }
 
-  /** Session config every entry point needs (nanos timestamps + local-mode
-    * sane shuffle parallelism are set by the callers; these are the
-    * semantics-critical ones).
+  /** Cores for a local session: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The one session builder: every entry point and the test suites get
+    * their session here. `local[cpus]` unless `master` names another,
+    * `cpus` shuffle partitions, no UI, [[sessionConfigs]], log level WARN.
     */
+  def session(cpus: Int = defaultCpus,
+      master: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder()
+      .master(master.getOrElse(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Session-RESETTABLE configs: safe to re-apply on `spark.newSession()`
     * clones (Verify's per-worker sessions). Static SparkContext configs
     * live in [[sessionConfigs]] only — setting one on a live session

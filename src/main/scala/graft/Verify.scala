@@ -7,7 +7,13 @@ import java.util.concurrent.atomic.AtomicInteger
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Built to survive a constrained driver config (default local[4]):
+  *   runMain graft.Verify <sfDir> <outDir>
+  *
+  * `SPARK_GRAFT_ONLY=<prefix1,prefix2,...>` dumps only the matching
+  * queries; tools/oracle_check.py compares only the query directories that
+  * exist, so the same compare scores a partial dump.
+  *
+  * Built to survive a constrained driver config (e.g. local[4]):
   *  - `oracle_sql.json` is written FIRST, so a mid-sweep timeout still
   *    leaves the driver everything it needs to score the queries that
   *    finished (each query's parquet dir appears as it completes).
@@ -41,14 +47,8 @@ import java.util.concurrent.atomic.AtomicInteger
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tables.defaultCpus
+    val spark = Tables.session(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -124,7 +124,7 @@ object Verify {
     }
     val attests = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-    val poolSize = math.min(12, math.max(4, cpus.toInt * 2))
+    val poolSize = math.min(12, math.max(4, cpus * 2))
     val pool = Executors.newFixedThreadPool(poolSize)
     val failures = new AtomicInteger(0)
     ordered.foreach { case (name, fn) =>
@@ -136,7 +136,7 @@ object Verify {
             // runtime-settable subset only: static configs (spark.serializer)
             // are builder-time and already inherited from the parent context
             Tables.sessionRuntimeConfigs.foreach { case (k, v) => s.conf.set(k, v) }
-            s.conf.set("spark.sql.shuffle.partitions", cpus)
+            s.conf.set("spark.sql.shuffle.partitions", cpus.toString)
             fn(s, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
             // the attest re-read is evidence infrastructure, not the
             // query: if it fails the parquet the driver scores was still

@@ -613,16 +613,6 @@ object Main {
       s"heap=${rt.maxMemory() >> 20}MB"
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    Tables.session(master = sys.env.get("SPARK_MASTER"))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.StringType
 
 /** SQL exposure of the engine's functions.
   *
@@ -13,30 +14,18 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionIn
   *    expressions with no Scala imports;
   *  - `registerAll(spark)` for an existing session (tests, notebooks).
   *
+  * Both register the same [[GraftExtensions.nativeFunctions]].
+  *
   * The reference has no UDF/extension surface at all (SURVEY §2.8); this is
   * the Spark-idiomatic replacement for its Spatialite extension loading
   * (`geopackage/__init__.py:70-77`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // `coerced` casts inputs to the canonical array element type, so SQL
-    // callers can pass e.g. the array<float> embeddings column directly
-    e.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct.coerced(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("bit_and_count"),
-      new ExpressionInfo(classOf[BitAndCount].getName, "bit_and_count"),
-      (exprs: Seq[Expression]) => BitAndCount.coerced(exprs(0), exprs(1))))
-    // cast-to-string first: the old UDF registration got this implicitly
-    // from its (String => _) signature; without it a DATE input would hash
-    // its internal Int days representation
-    e.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_signature"),
-      (exprs: Seq[Expression]) => MinHashSig(
-        Cast(exprs(0), org.apache.spark.sql.types.StringType), 64, 2)))
+    GraftExtensions.nativeFunctions.foreach { case (name, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     // bounded-heap per-group top-k: the strategy plans GroupTopKNode, the
     // rule rewrites row_number()<=k window filters into it
     e.injectPlannerStrategy(_ => graft.plans.GroupTopK.Strategy)
@@ -45,33 +34,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Register every graft SQL function on an existing session. */
+  /** The native SQL functions, one list for both registration paths. */
+  val nativeFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // `coerced` casts inputs to the canonical array element type, so SQL
+    // callers can pass e.g. the array<float> embeddings column directly
+    "dot_product" -> (exprs => DotProduct.coerced(exprs(0), exprs(1))),
+    "bit_and_count" -> (exprs => BitAndCount.coerced(exprs(0), exprs(1))),
+    // cast-to-string first: the old UDF registration got this implicitly
+    // from its (String => _) signature; without it a DATE input would hash
+    // its internal Int days representation
+    "minhash_signature" -> (exprs => MinHashSig(
+      Cast(exprs(0), StringType), 64, 2)),
+    "rolling_fingerprint" -> (exprs => RollingFingerprint(
+      Cast(exprs(0), StringType),
+      exprs(1) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"rolling_fingerprint k must be an integer literal, got $other")
+      })),
+    "lang_id" -> (exprs => LangId(Cast(exprs(0), StringType))))
+
+  /** Register every graft SQL function on an existing session: the native
+    * functions plus the Scala UDFs, which only this path offers.
+    */
   def registerAll(spark: SparkSession): Unit = {
     import graft.geo.Geo
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.registerFunction(spark, "dot_product",
-      exprs => DotProduct.coerced(exprs(0), exprs(1)))
-    ColumnBridge.registerFunction(spark, "bit_and_count",
-      exprs => BitAndCount.coerced(exprs(0), exprs(1)))
+    nativeFunctions.foreach { case (name, builder) =>
+      ColumnBridge.registerFunction(spark, name, builder)
+    }
     spark.udf.register("haversine_m",
       (lon1: Double, lat1: Double, lon2: Double, lat2: Double) =>
         Geo.haversine(lon1, lat1, lon2, lat2))
     spark.udf.register("node_id",
       (lon: Double, lat: Double, precision: Int) => Geo.nodeId(lon, lat, precision))
-    ColumnBridge.registerFunction(spark, "minhash_signature",
-      exprs => MinHashSig(
-        Cast(exprs(0), org.apache.spark.sql.types.StringType), 64, 2))
     spark.udf.register("simhash", graft.llm.Dedup.simhashUdf)
-    ColumnBridge.registerFunction(spark, "rolling_fingerprint",
-      exprs => RollingFingerprint(
-        Cast(exprs(0), org.apache.spark.sql.types.StringType),
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"rolling_fingerprint k must be an integer literal, got $other")
-        }))
-    ColumnBridge.registerFunction(spark, "lang_id",
-      exprs => LangId(Cast(exprs(0), org.apache.spark.sql.types.StringType)))
     ColumnBridge.addStrategy(spark, graft.plans.GroupTopK.Strategy)
     ColumnBridge.addOptimization(spark, graft.plans.RankLimitRewrite)
   }

@@ -729,16 +729,9 @@ object Route {
       return betweennessLocal(g, weightCol, Some(sources.distinct))
         .toSeq.toDF("_n", "betweenness")
     }
-    val dbgB = sys.env.contains("SPARK_GRAFT_FIXPOINT_DEBUG")
-    def stamp(tag: String, t0: Long): Long = {
-      if (dbgB) System.err.println(f"[fixpoint] $tag ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      System.nanoTime()
-    }
-    var tS = System.nanoTime()
     val rg = fromPropertyGraph(g, weightCol)
     val srcVids = rg.idOf.filter(col("_n").isin(sources.distinct: _*))
       .collect().map(_.getLong(1))
-    tS = stamp("build+srcVids", tS)
     require(srcVids.length == sources.distinct.length,
       s"unknown source node(s) among: ${sources.distinct.mkString(", ")}")
     val base = rg.graph.cache()
@@ -753,7 +746,6 @@ object Route {
       var acc: org.apache.spark.rdd.RDD[(VertexId, Double)] = null
       srcVids.sorted.grouped(64).foreach { chunk =>
         val d = brandesDeltas(base, chunk.toArray, maxIters)
-        tS = stamp("brandesDeltas-return", tS)
         // fold into a FRESH RDD before checkpointing. brandesDeltas has
         // already run a job over `d` (cache + count), which latches
         // doCheckpointCalled on it — localCheckpoint() directly on `d`
@@ -768,7 +760,6 @@ object Route {
           (if (acc == null) d.map(identity) else acc.union(d).reduceByKey(_ + _))
             .localCheckpoint()
         next.count()
-        tS = stamp("chunk-fold", tS)
         if (acc != null) acc.unpersist(blocking = false)
         d.unpersist(blocking = false)
         acc = next
@@ -779,6 +770,18 @@ object Route {
         .select(col("_n"),
           coalesce(col("betweenness"), lit(0.0)).as("betweenness"))
     } finally base.unpersist(blocking = false)
+  }
+
+  /** Runs `body` with `tag` as the description of the Spark jobs it starts
+    * (listeners see it as `spark.job.description`; ProfileOne prints it per
+    * job, so a fixpoint's per-round cost stays visible), then restores the
+    * caller's description.
+    */
+  private def withJobDescription[T](sc: org.apache.spark.SparkContext,
+      tag: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(tag)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** One batched Brandes pass over ≤64 sources: forward (dist, σ) fixpoint,
@@ -817,11 +820,10 @@ object Route {
       (if (si >= 0) new SrcDistSig(Array(si), Array(0.0), Array(1.0))
        else SrcDistSig.empty, true)
     }.cache()
+    val sc = graph.vertices.sparkContext
     var iter = 0
     var changed = true
-    val dbg = sys.env.contains("SPARK_GRAFT_FIXPOINT_DEBUG")
     while (changed && iter < maxIters) {
-      val tRound = System.nanoTime()
       val msgs = fw.aggregateMessages[SrcDistSig](
         ctx => if (!ctx.srcAttr._1.isEmpty) {
           val s = ctx.srcAttr._1
@@ -845,16 +847,14 @@ object Route {
       // replicated view — an aggregateMessages whose view still pointed at
       // an unpersisted predecessor would re-derive the whole round chain
       // (quadratic in rounds — measured 5x per-round cliff at 8k nodes)
-      changed = next.triplets
-        .filter(t => t.srcAttr._2 || t.dstAttr._2).count() > 0
+      changed = withJobDescription(sc, s"brandes/p1/round=${iter + 1}") {
+        next.triplets.filter(t => t.srcAttr._2 || t.dstAttr._2).count() > 0
+      }
       fw.unpersistVertices(blocking = false)
       fw.edges.unpersist(blocking = false)
       fw = next
       iter += 1
-      if (dbg) System.err.println(f"[fixpoint] p1 round=$iter ${(System.nanoTime()-tRound)/1e9}%.1fs")
     }
-    if (dbg)
-      System.err.println(s"[fixpoint] brandes phase1 rounds=$iter converged=${!changed}")
     // ---- phase 2: dependency δ back up each source's shortest-path DAG ----
     // same (state..., changed) + triplets-count protocol as phase 1
     var bw: GXGraph[(SrcDistSig, DeltaVec, Boolean), Double] =
@@ -862,7 +862,6 @@ object Route {
     changed = true
     iter = 0
     while (changed && iter < maxIters) {
-      val tRound = System.nanoTime()
       val msgs = bw.aggregateMessages[DeltaVec](
         ctx => {
           // merge-join the edge ends' per-source states (both idx-sorted);
@@ -904,16 +903,14 @@ object Route {
         val nd = m.getOrElse(DeltaVec.empty)
         (old._1, nd, !nd.same(old._2))
       }.cache()
-      changed = next.triplets
-        .filter(t => t.srcAttr._3 || t.dstAttr._3).count() > 0
+      changed = withJobDescription(sc, s"brandes/p2/round=${iter + 1}") {
+        next.triplets.filter(t => t.srcAttr._3 || t.dstAttr._3).count() > 0
+      }
       bw.unpersistVertices(blocking = false)
       bw.edges.unpersist(blocking = false)
       bw = next
       iter += 1
-      if (dbg) System.err.println(f"[fixpoint] p2 round=$iter ${(System.nanoTime()-tRound)/1e9}%.1fs")
     }
-    if (dbg)
-      System.err.println(s"[fixpoint] brandes phase2 rounds=$iter converged=${!changed}")
     val deltas = bw.vertices
       .flatMap { case (vid, (_, dv, _)) =>
         // own-source term excluded; ascending-idx fold is the canonical

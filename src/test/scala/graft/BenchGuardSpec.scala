@@ -38,4 +38,25 @@ class BenchGuardSpec extends AnyFunSuite {
     "the rest of the run is unusually fast") {
     assert(Bench.stGuardWarning(21.0, 120.0).isEmpty)
   }
+
+  test("a query function that throws is reported as failed on stdout and " +
+    "in BENCH_SELF.json, and still timed every rep") {
+    val boom: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame =
+      (_, _) => throw new IllegalStateException("boom")
+    val failed = Bench.timeReps(3) { boom(null, "/nowhere").count(); () }
+    assert(failed.failure.contains("java.lang.IllegalStateException"))
+    assert(failed.times.size == 3)
+    val ok = Bench.timeReps(3) { () }
+    assert(ok.failure.isEmpty)
+    val results = Seq("a1_ok" -> ok, "b1_boom" -> failed)
+    val line = Bench.stdoutLine(results, ok, "/sf")
+    assert(line.contains("\"failed\":1,"), line)
+    assert(line.contains("\"n_queries\":2,"), line)
+    val record = Bench.selfRecord(results, 3, 0.0, ok, "/sf")
+    assert(record.contains(
+      "\"failed\":{\"b1_boom\":\"java.lang.IllegalStateException\"}"), record)
+    assert(Bench.selfRecord(Seq("a1_ok" -> ok), 3, 0.0, ok, "/sf")
+      .contains("\"failed\":{}"))
+  }
 }

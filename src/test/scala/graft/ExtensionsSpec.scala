@@ -49,4 +49,25 @@ class ExtensionsSpec extends AnyFunSuite {
       .head.getLong(0)
     assert(popI == 1L)
   }
+
+  test("every native function resolves from spark.sql on both registration paths") {
+    val names = GraftExtensions.nativeFunctions.map(_._1)
+    assert(names.distinct.size == names.size)
+    // the config path (spark.sql.extensions) injects exactly the list
+    val injected = scala.collection.mutable.ArrayBuffer[String]()
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    assert(injected.toSeq == names)
+    GraftExtensions.registerAll(spark)
+    names.foreach { n =>
+      assert(spark.catalog.functionExists(n), n)
+      assert(spark.sql(s"DESCRIBE FUNCTION $n").count() > 0, n)
+    }
+    val fp = spark.sql("SELECT rolling_fingerprint('abcdefgh', 3) AS f").head
+    assert(!fp.isNullAt(0))
+  }
 }

@@ -187,6 +187,34 @@ class RouteSpec extends AnyFunSuite {
     assert(dist.filterNot(_._1 == Fixture.TestNode2).values.forall(_ < hub))
   }
 
+  test("distributed betweenness tags each fixpoint round's job and restores " +
+    "the caller's job description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val all = g.nodes.select("_n").collect().map(_.getString(0)).toSeq
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      Route.betweenness(spark, g, all, "_length", maxLocalEdges = -1).collect()
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val deadline = System.nanoTime() + 10e9.toLong
+      def tags = seen.toArray.map(_.toString).toSet
+      while (!tags.contains("brandes/p2/round=1") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(tags.contains("brandes/p1/round=1") && tags.contains("brandes/p2/round=1"),
+        tags)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("landmark-sampled betweenness surfaces the barbell bridge") {
     import TestSpark.spark.implicits._
     // two complete 5-cliques joined a0 — x — b0: all cross-cluster traffic

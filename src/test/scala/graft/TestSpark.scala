@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Tables.session(cpus = 4)
 
   /** Stage `df` as ONE flat parquet file at `dir/name` — the shape
     * FileStreamSource lists (it ignores nested part directories). Streams
