@@ -54,21 +54,24 @@ object GraftExtensions {
       })),
     "lang_id" -> (exprs => LangId(Cast(exprs(0), StringType))))
 
-  /** Register every graft SQL function on an existing session: the native
-    * functions plus the Scala UDFs, which only this path offers.
+  /** Register every graft SQL function that does not resolve yet on an
+    * existing session: the native functions plus the Scala UDFs, which only
+    * this path offers.
     */
   def registerAll(spark: SparkSession): Unit = {
     import graft.geo.Geo
     import org.apache.spark.sql.graftbridge.ColumnBridge
+    def once(name: String)(register: => Unit): Unit =
+      if (ColumnBridge.lookupFunction(spark, name).isEmpty) register
     nativeFunctions.foreach { case (name, builder) =>
-      ColumnBridge.registerFunction(spark, name, builder)
+      once(name)(ColumnBridge.registerFunction(spark, name, builder))
     }
-    spark.udf.register("haversine_m",
+    once("haversine_m")(spark.udf.register("haversine_m",
       (lon1: Double, lat1: Double, lon2: Double, lat2: Double) =>
-        Geo.haversine(lon1, lat1, lon2, lat2))
-    spark.udf.register("node_id",
-      (lon: Double, lat: Double, precision: Int) => Geo.nodeId(lon, lat, precision))
-    spark.udf.register("simhash", graft.llm.Dedup.simhashUdf)
+        Geo.haversine(lon1, lat1, lon2, lat2)))
+    once("node_id")(spark.udf.register("node_id",
+      (lon: Double, lat: Double, precision: Int) => Geo.nodeId(lon, lat, precision)))
+    once("simhash")(spark.udf.register("simhash", graft.llm.Dedup.simhashUdf))
     ColumnBridge.addStrategy(spark, graft.plans.GroupTopK.Strategy)
     ColumnBridge.addOptimization(spark, graft.plans.RankLimitRewrite)
   }

@@ -66,9 +66,7 @@ object Bridges {
         greatest(col("u").cast("long"), col("v").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    val edgeCount = canon.limit((maxLocalEdges + 1).min(Int.MaxValue - 1L).toInt)
-      .count()
-    if (edgeCount <= maxLocalEdges) {
+    if (Route.fitsLocally(canon, maxLocalEdges)) {
       val es = canon.as[(Long, Long)].collect()
       return bridgesLocal(es).toSeq.toDF("u", "v")
     }

@@ -29,8 +29,7 @@ object Components {
       maxLocalEdges: Long = Route.LocalPathMaxEdges,
       numIter: Int = 64): DataFrame = {
     import spark.implicits._
-    val edgeCount = edges.count()
-    if (edgeCount <= math.min(maxLocalEdges, Route.LocalPathMaxEdges)) {
+    if (Route.fitsLocally(edges, maxLocalEdges)) {
       val ns = nodes.as[Long].collect()
       val es = edges.as[(Long, Long)].collect()
       return sccLocal(ns, es).toSeq.toDF("node", "scc_id")

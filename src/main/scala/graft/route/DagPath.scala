@@ -38,9 +38,7 @@ object DagPath {
     import spark.implicits._
     val canon = edges.select(col("u").cast("long"), col("v").cast("long"))
       .filter(col("u") < col("v")).distinct()
-    val edgeCount = canon.limit((maxLocalEdges + 1).min(Int.MaxValue - 1L).toInt)
-      .count()
-    if (edgeCount <= maxLocalEdges) {
+    if (Route.fitsLocally(canon, maxLocalEdges)) {
       val es = canon.as[(Long, Long)].collect()
       return longestPathLocal(es).toSeq.toDF("node", "dist")
     }

@@ -1,7 +1,5 @@
 package graft.route
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,9 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Same two-path dispatch as [[Route.shortestPath]]:
   *
-  *  - Below the gate, a driver Dijkstra that STOPS at the cutoff — the
-  *    frontier never leaves the walkshed, so cost is proportional to the
-  *    reachable subgraph, not the whole graph.
+  *  - Below the gate, the driver search kernel ([[Route.search]]) with
+  *    the cutoff — the frontier never leaves the walkshed, so cost is
+  *    proportional to the reachable subgraph, not the whole graph.
   *  - Above it, bounded frontier relaxation: per round one join of the
   *    improved frontier against the symmetric edge relation + a min
   *    partial agg, discarding candidates beyond the cutoff BEFORE the
@@ -31,8 +29,8 @@ import org.apache.spark.sql.functions._
 object Isochrone {
 
   /** Nodes within `cutoff` of `source` over the undirected weighted
-    * edges (u, v, w ≥ 0). Returns (node, dist) including the source at
-    * distance 0.
+    * edges (u, v, w ≥ 0); a row with a null `w` is no edge. Returns
+    * (node, dist) including the source at distance 0.
     */
   def isochrone(spark: SparkSession, edges: DataFrame, source: Long,
       cutoff: Double, maxLocalEdges: Long = Route.LocalPathMaxEdges,
@@ -40,38 +38,16 @@ object Isochrone {
     import spark.implicits._
     val canon = edges.select(col("u").cast("long"), col("v").cast("long"),
       col("w").cast("double")).filter(col("u") =!= col("v"))
-    val edgeCount = canon.limit((maxLocalEdges + 1).min(Int.MaxValue - 1L).toInt)
-      .count()
-    if (edgeCount <= maxLocalEdges) {
-      val es = canon.as[(Long, Long, Double)].collect()
-      return isochroneLocal(es, source, cutoff).toSeq.toDF("node", "dist")
+    if (Route.fitsLocally(canon, maxLocalEdges)) {
+      // both directions of each edge, newest edge first per node
+      val adjacency = canon.filter(col("w").isNotNull)
+        .as[(Long, Long, Double)].collect().reverseIterator
+        .flatMap { case (u, v, w) => Iterator(u -> (v, w), v -> (u, w)) }
+        .toArray.groupBy(_._1).map { case (n, es) => n -> es.map(_._2) }
+      return Route.search(adjacency, source, cutoff = cutoff).dist.toSeq
+        .sortBy(_._1).toDF("node", "dist")
     }
     isochroneDistributed(spark, canon, source, cutoff, maxRounds)
-  }
-
-  /** Cutoff Dijkstra over the collected edges. */
-  private[graft] def isochroneLocal(edges: Array[(Long, Long, Double)],
-      source: Long, cutoff: Double): Array[(Long, Double)] = {
-    val adj = mutable.Map.empty[Long, List[(Long, Double)]]
-      .withDefaultValue(Nil)
-    edges.foreach { case (u, v, w) =>
-      adj(u) ::= ((v, w)); adj(v) ::= ((u, w))
-    }
-    val dist = mutable.Map(source -> 0.0)
-    val pq = mutable.PriorityQueue((0.0, source))(
-      Ordering.by[(Double, Long), Double](_._1).reverse)
-    while (pq.nonEmpty) {
-      val (d0, n) = pq.dequeue()
-      if (d0 <= dist(n)) {
-        adj(n).foreach { case (m, w) =>
-          val nd = d0 + w
-          if (nd <= cutoff && nd < dist.getOrElse(m, Double.PositiveInfinity)) {
-            dist(m) = nd; pq.enqueue((nd, m))
-          }
-        }
-      }
-    }
-    dist.toArray.sortBy(_._1)
   }
 
   /** Bounded frontier relaxation (see object doc). */

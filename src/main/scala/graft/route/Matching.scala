@@ -51,9 +51,7 @@ object Matching {
         col("w").cast("double").as("w"))
       .filter(col("u") =!= col("v"))
       .groupBy("u", "v").agg(min("w").as("w"))
-    val edgeCount = canon.limit((maxLocalEdges + 1).min(Int.MaxValue - 1L).toInt)
-      .count()
-    if (edgeCount <= maxLocalEdges) {
+    if (Route.fitsLocally(canon, maxLocalEdges)) {
       val es = canon.as[(Long, Long, Double)].collect()
       return greedyLocal(es).toSeq.toDF("u", "v", "w")
     }

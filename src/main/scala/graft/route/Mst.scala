@@ -40,9 +40,7 @@ object Mst {
     import spark.implicits._
     val base = edges.select(col("u").cast("long"), col("v").cast("long"),
       col("w").cast("double")).filter(col("u") =!= col("v"))
-    val edgeCount = base.limit((maxLocalEdges + 1).min(Int.MaxValue - 1L).toInt)
-      .count()
-    if (edgeCount <= maxLocalEdges) {
+    if (Route.fitsLocally(base, maxLocalEdges)) {
       val es = base.as[(Long, Long, Double)].collect()
       return kruskalLocal(es).toSeq.toDF("u", "v", "w")
     }

@@ -1,5 +1,7 @@
 package graft.route
 
+import scala.collection.mutable
+
 import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -242,12 +244,76 @@ object Route {
     */
   val LocalPathMaxEdges = 200000L
 
+  /** The size gate every driver-side route shares. */
+  private def gated(g: PropertyGraph, maxLocalEdges: Long): Boolean =
+    g.size() <= math.min(maxLocalEdges, LocalPathMaxEdges)
+
+  /** The same gate for an edge relation: counts at most one row past it. */
+  private[route] def fitsLocally(edges: DataFrame, maxLocalEdges: Long): Boolean = {
+    val bound = math.min(maxLocalEdges, LocalPathMaxEdges)
+    edges.limit((bound + 1).max(0L).toInt).count() <= bound
+  }
+
+  /** Which of `ids` are nodes of `g`, in one job for all of them. */
+  private def knownNodes(g: PropertyGraph, ids: Seq[String]): Set[String] =
+    g.nodes.filter(col("_n").isin(ids.distinct: _*)).select("_n")
+      .collect().map(_.getString(0)).toSet
+
+  /** node -> (neighbour, weight) in collect order; null weights dropped. */
+  private def collectAdjacency(g: PropertyGraph,
+      weightCol: String): Map[String, Array[(String, Double)]] =
+    g.edges
+      .filter(col(weightCol).isNotNull)
+      .select(col("_u"), col("_v"), col(weightCol).cast("double"))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
+
+  private[graft] final case class Settled[N](dist: mutable.HashMap[N, Double],
+      pred: mutable.HashMap[N, N], settled: mutable.HashSet[N])
+
+  /** The one driver-side search kernel: Dijkstra from `source` over an
+    * in-memory adjacency (weights ≥ 0), keyed on g + `h`, so an admissible
+    * `h` makes it A*. It stops once `target` is settled and drops any
+    * relaxation costing more than `cutoff`. Ties dequeue in heap order, the
+    * same on every call (RouteSpec pins them).
+    */
+  private[graft] def search[N](adjacency: collection.Map[N, Array[(N, Double)]],
+      source: N, target: Option[N] = None,
+      cutoff: Double = Double.PositiveInfinity,
+      h: N => Double = (_: N) => 0.0): Settled[N] = {
+    val dist = mutable.HashMap[N, Double](source -> 0.0)
+    val pred = mutable.HashMap[N, N]()
+    val done = mutable.HashSet[N]()
+    val pq = mutable.PriorityQueue[(Double, N)]()(
+      Ordering.by[(Double, N), Double](_._1).reverse)
+    val noEdges = Array.empty[(N, Double)]
+    pq.enqueue((h(source), source))
+    while (pq.nonEmpty) {
+      val n = pq.dequeue()._2
+      if (!done.contains(n)) {
+        done += n
+        if (target.contains(n)) return Settled(dist, pred, done)
+        val d = dist(n)
+        adjacency.getOrElse(n, noEdges).foreach { case (m, w) =>
+          val nd = d + w
+          if (nd <= cutoff && nd < dist.getOrElse(m, Double.PositiveInfinity)) {
+            dist(m) = nd
+            pred(m) = n
+            pq.enqueue((nd + h(m), m))
+          }
+        }
+      }
+    }
+    Settled(dist, pred, done)
+  }
+
   /** Point-to-point shortest path — dispatches to the driver-side fast
     * path for interactive-sized graphs, distributed Pregel otherwise
     * (SURVEY §7.1 item 6 keeps both).
     */
   def shortestPath(g: PropertyGraph, u: String, v: String, weightCol: String): Option[(Seq[String], Double)] =
-    if (g.size() <= LocalPathMaxEdges) shortestPathLocal(g, u, v, weightCol)
+    if (gated(g, LocalPathMaxEdges)) shortestPathLocal(g, u, v, weightCol)
     else shortestPathPregel(g, u, v, weightCol)
 
   /** Driver-side Dijkstra over a collected adjacency list — one collect,
@@ -255,44 +321,8 @@ object Route {
     * interactive queries on metro-scale graphs.
     */
   def shortestPathLocal(g: PropertyGraph, u: String, v: String,
-      weightCol: String): Option[(Seq[String], Double)] = {
-    if (!g.hasNode(u) || !g.hasNode(v)) return None
-    if (u == v) return Some((Seq(u), 0.0))
-    val adjacency = g.edges
-      .filter(col(weightCol).isNotNull)
-      .select(col("_u"), col("_v"), col(weightCol).cast("double"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
-
-    val dist = scala.collection.mutable.HashMap[String, Double](u -> 0.0)
-    val pred = scala.collection.mutable.HashMap[String, String]()
-    val done = scala.collection.mutable.HashSet[String]()
-    val pq = scala.collection.mutable.PriorityQueue[(Double, String)]()(
-      Ordering.by[(Double, String), Double](_._1).reverse)
-    pq.enqueue((0.0, u))
-    while (pq.nonEmpty) {
-      val (d, n) = pq.dequeue()
-      if (!done.contains(n)) {
-        done += n
-        if (n == v) {
-          val path = scala.collection.mutable.ListBuffer(v)
-          var cur = v
-          while (cur != u) { cur = pred(cur); path.prepend(cur) }
-          return Some((path.toList, d))
-        }
-        adjacency.getOrElse(n, Array.empty).foreach { case (m, w) =>
-          val nd = d + w
-          if (nd < dist.getOrElse(m, Double.PositiveInfinity)) {
-            dist(m) = nd
-            pred(m) = n
-            pq.enqueue((nd, m))
-          }
-        }
-      }
-    }
-    None
-  }
+      weightCol: String): Option[(Seq[String], Double)] =
+    localPath(g, u, v, weightCol, _ => 0.0)
 
   /** A* point-to-point search with the great-circle (haversine) heuristic —
     * the standard road-network accelerator over plain Dijkstra. Admissible
@@ -303,9 +333,10 @@ object Route {
     * while settling (often far) fewer nodes. Nodes without geometry get
     * h = 0 (falls back to Dijkstra behavior locally, still admissible).
     *
-    * Driver fast path by design, like [[shortestPathLocal]]: point-to-point
-    * search is a latency workload; graphs past [[LocalPathMaxEdges]] route
-    * through the Pregel SSSP instead.
+    * Driver fast path by design, on the [[search]] kernel like
+    * [[shortestPathLocal]]: point-to-point search is a latency workload;
+    * graphs past the local gate route through the Pregel SSSP instead
+    * (identical optimal answer, heuristic-free).
     *
     * @param weightCol must be meters-compatible with the coordinate space
     *                  (`_length` or any column ≥ great-circle meters);
@@ -314,60 +345,37 @@ object Route {
     */
   def shortestPathAStar(g: PropertyGraph, u: String, v: String,
       weightCol: String = "_length",
-      maxLocalEdges: Long = LocalPathMaxEdges): Option[(Seq[String], Double)] = {
-    // same gate as shortestPath: past the local bound, collecting the edge
-    // and coordinate sets would OOM the driver, so delegate to the Pregel
-    // SSSP (identical optimal answer, heuristic-free)
-    if (g.size() > maxLocalEdges) return shortestPathPregel(g, u, v, weightCol)
-    if (!g.hasNode(u) || !g.hasNode(v)) return None
-    if (u == v) return Some((Seq(u), 0.0))
-    val adjacency = g.edges
-      .filter(col(weightCol).isNotNull)
-      .select(col("_u"), col("_v"), col(weightCol).cast("double"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
-    val coords: Map[String, (Double, Double)] = g.nodes
-      .filter(col("geom").isNotNull)
-      .select(col("_n"), col("geom.coordinates"))
-      .collect()
-      .flatMap { r =>
-        val c = r.getSeq[Double](1)
-        if (c != null && c.length >= 2) Some(r.getString(0) -> (c.head, c(1))) else None
-      }.toMap
-    val target = coords.get(v)
-    def h(n: String): Double = (coords.get(n), target) match {
-      case (Some((lon, lat)), Some((tl, tt))) => graft.geo.Geo.haversine(lon, lat, tl, tt)
-      case _ => 0.0
-    }
-    val dist = scala.collection.mutable.HashMap[String, Double](u -> 0.0)
-    val pred = scala.collection.mutable.HashMap[String, String]()
-    val done = scala.collection.mutable.HashSet[String]()
-    // pq key = f = g + h; dist holds g
-    val pq = scala.collection.mutable.PriorityQueue[(Double, String)]()(
-      Ordering.by[(Double, String), Double](_._1).reverse)
-    pq.enqueue((h(u), u))
-    while (pq.nonEmpty) {
-      val (_, n) = pq.dequeue()
-      if (!done.contains(n)) {
-        done += n
-        if (n == v) {
-          val path = scala.collection.mutable.ListBuffer(v)
-          var cur = v
-          while (cur != u) { cur = pred(cur); path.prepend(cur) }
-          return Some((path.toList, dist(v)))
-        }
-        adjacency.getOrElse(n, Array.empty).foreach { case (m, w) =>
-          val nd = dist(n) + w
-          if (nd < dist.getOrElse(m, Double.PositiveInfinity)) {
-            dist(m) = nd
-            pred(m) = n
-            pq.enqueue((nd + h(m), m))
-          }
-        }
+      maxLocalEdges: Long = LocalPathMaxEdges): Option[(Seq[String], Double)] =
+    if (!gated(g, maxLocalEdges)) shortestPathPregel(g, u, v, weightCol)
+    else localPath(g, u, v, weightCol, {
+      val coords: Map[String, (Double, Double)] = g.nodes
+        .filter(col("geom").isNotNull)
+        .select(col("_n"), col("geom.coordinates"))
+        .collect()
+        .flatMap { r =>
+          val c = r.getSeq[Double](1)
+          if (c != null && c.length >= 2) Some(r.getString(0) -> (c.head, c(1))) else None
+        }.toMap
+      val target = coords.get(v)
+      n => (coords.get(n), target) match {
+        case (Some((lon, lat)), Some((tl, tt))) => graft.geo.Geo.haversine(lon, lat, tl, tt)
+        case _ => 0.0
       }
-    }
-    None
+    })
+
+  /** The gated point-to-point route: one lookup for both endpoints, then
+    * the kernel from `u` to `v` under `h` (built only when both exist).
+    */
+  private def localPath(g: PropertyGraph, u: String, v: String, weightCol: String,
+      h: => String => Double): Option[(Seq[String], Double)] = {
+    val known = knownNodes(g, Seq(u, v))
+    if (!known(u) || !known(v)) return None
+    if (u == v) return Some((Seq(u), 0.0))
+    val s = search(collectAdjacency(g, weightCol), u, Some(v), h = h)
+    if (!s.settled(v)) return None
+    var path = List(v)
+    while (path.head != u) path ::= s.pred(path.head)
+    Some((path, s.dist(v)))
   }
 
   /** Distributed point-to-point Dijkstra via the SSSP Pregel program —
@@ -395,27 +403,16 @@ object Route {
     // fall back to one tiny distributed lookup per hop (path length jobs,
     // driver memory O(path)) beyond it
     val nReach = reachable.count()
-    val vids = scala.collection.mutable.ListBuffer[VertexId]()
+    val predOf: VertexId => VertexId =
+      if (nReach <= 2000000L) { val states = reachable.collectAsMap(); c => states(c)._2 }
+      else c => reachable.filter(_._1 == c).map(_._2._2).first()
+    val vids = mutable.ListBuffer[VertexId]()
     var cur = target
     var guard = 0L
-    if (nReach <= 2000000L) {
-      val states = reachable.collectAsMap()
-      while (cur != -1L && guard <= nReach) {
-        vids.prepend(cur)
-        cur = if (cur == vidMap(u)) -1L else states(cur)._2
-        guard += 1
-      }
-    } else {
-      while (cur != -1L && guard <= nReach) {
-        vids.prepend(cur)
-        cur =
-          if (cur == vidMap(u)) -1L
-          else {
-            val c = cur
-            reachable.filter(_._1 == c).map(_._2._2).first()
-          }
-        guard += 1
-      }
+    while (cur != -1L && guard <= nReach) {
+      vids.prepend(cur)
+      cur = if (cur == vidMap(u)) -1L else predOf(cur)
+      guard += 1
     }
     val names = rg.idOf.filter(col("_vid").isin(vids.toSeq: _*))
       .collect().map(r => r.getLong(1) -> r.getString(0)).toMap
@@ -436,45 +433,21 @@ object Route {
     import spark.implicits._
     require(landmarks.nonEmpty && landmarks.size <= 64,
       "1..64 landmarks per pass (state size is |landmarks| per vertex)")
-    // small-graph gate, same dispatch as [[shortestPath]]: one driver
-    // Dijkstra per landmark over a single collected adjacency beats
+    // small-graph gate, same dispatch as [[shortestPath]]: one kernel
+    // search per landmark over a single collected adjacency beats
     // |landmarks| maps carried through O(diameter) Pregel supersteps on
     // interactive-sized graphs. Emits exactly the Pregel pass's rows —
     // reachable (node, landmark) pairs only, landmark self-distance 0
     // (RouteSpec pins gated == distributed).
-    if (g.size() <= math.min(maxLocalEdges, LocalPathMaxEdges)) {
-      val nodeSet = g.nodes.select("_n").collect().map(_.getString(0)).toSet
-      val missingL = landmarks.distinct.filterNot(nodeSet)
+    if (gated(g, maxLocalEdges)) {
+      val missingL = landmarks.distinct.filterNot(knownNodes(g, landmarks))
       require(missingL.isEmpty,
         s"unknown landmark node(s): ${missingL.mkString(", ")}")
-      val adjacency = g.edges
-        .filter(col(weightCol).isNotNull)
-        .select(col("_u"), col("_v"), col(weightCol).cast("double"))
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
-      val out = landmarks.distinct.flatMap { lm =>
-        val dist = scala.collection.mutable.HashMap[String, Double](lm -> 0.0)
-        val done = scala.collection.mutable.HashSet[String]()
-        val pq = scala.collection.mutable.PriorityQueue[(Double, String)]()(
-          Ordering.by[(Double, String), Double](_._1).reverse)
-        pq.enqueue((0.0, lm))
-        while (pq.nonEmpty) {
-          val (d, n) = pq.dequeue()
-          if (!done.contains(n)) {
-            done += n
-            adjacency.getOrElse(n, Array.empty).foreach { case (m, w) =>
-              val nd = d + w
-              if (nd < dist.getOrElse(m, Double.PositiveInfinity)) {
-                dist(m) = nd
-                pq.enqueue((nd, m))
-              }
-            }
-          }
-        }
-        done.iterator.map(n => (n, lm, dist(n)))
-      }
-      return out.toDF("_n", "landmark", "distance")
+      val adjacency = collectAdjacency(g, weightCol)
+      return landmarks.distinct.flatMap { lm =>
+        val s = search(adjacency, lm)
+        s.settled.iterator.map(n => (n, lm, s.dist(n)))
+      }.toDF("_n", "landmark", "distance")
     }
     val rg = fromPropertyGraph(g, weightCol)
     val lmVids: Map[VertexId, String] = rg.idOf
@@ -720,7 +693,7 @@ object Route {
     // which dwarfs the actual work on interactive-sized graphs. The local
     // kernel is the exact same Brandes (RouteSpec pins distributed == local
     // with the gate forced off), so results are identical either way.
-    if (g.size() <= math.min(maxLocalEdges, LocalPathMaxEdges)) {
+    if (gated(g, maxLocalEdges)) {
       import spark.implicits._
       val nodeSet = g.nodes.select("_n").collect().map(_.getString(0)).toSet
       val missing = sources.distinct.filterNot(nodeSet)
@@ -932,21 +905,16 @@ object Route {
   }
 
   /** Driver-side exact Brandes over a collected adjacency list — the
-    * interactive path for gated graph sizes (mirrors
-    * [[shortestPathLocal]]'s dispatch philosophy) and the independent
-    * reference implementation the distributed fixpoint is tested against.
-    * Returns every node (zeros included).
+    * interactive path for gated graph sizes and the independent reference
+    * implementation the distributed fixpoint is tested against, so it keeps
+    * its own loop rather than the [[search]] kernel (it also counts
+    * equal-cost paths). Returns every node (zeros included).
     */
   def betweennessLocal(g: PropertyGraph, weightCol: String,
       sources: Option[Seq[String]] = None): Map[String, Double] = {
     require(g.size() <= LocalPathMaxEdges,
       s"graph exceeds $LocalPathMaxEdges edges; use betweenness() (distributed)")
-    val adjacency = g.edges
-      .filter(col(weightCol).isNotNull)
-      .select(col("_u"), col("_v"), col(weightCol).cast("double"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
+    val adjacency = collectAdjacency(g, weightCol)
     val nodes = g.nodes.select("_n").collect().map(_.getString(0)).toSeq
     val bc = scala.collection.mutable.HashMap[String, Double]()
     nodes.foreach(n => bc(n) = 0.0)

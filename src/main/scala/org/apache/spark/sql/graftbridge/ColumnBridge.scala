@@ -52,4 +52,11 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The registry entry a SQL function name resolves to, if any. */
+  def lookupFunction(spark: org.apache.spark.sql.SparkSession,
+      name: String): Option[org.apache.spark.sql.catalyst.expressions.ExpressionInfo] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+      .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
 }

@@ -70,4 +70,19 @@ class ExtensionsSpec extends AnyFunSuite {
     val fp = spark.sql("SELECT rolling_fingerprint('abcdefgh', 3) AS f").head
     assert(!fp.isNullAt(0))
   }
+
+  test("registerAll is idempotent: a second call replaces no registry entry") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val names = GraftExtensions.nativeFunctions.map(_._1) ++
+      Seq("haversine_m", "node_id", "simhash")
+    GraftExtensions.registerAll(spark)
+    val before = names.map(n => ColumnBridge.lookupFunction(spark, n))
+    assert(before.forall(_.isDefined), names.zip(before))
+    GraftExtensions.registerAll(spark)
+    names.zip(before).foreach { case (n, b) =>
+      val after = ColumnBridge.lookupFunction(spark, n)
+      assert(after.exists(_ eq b.get), s"$n was registered again")
+      assert(spark.catalog.functionExists(n), n)
+    }
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.PropertyGraph
-import graft.route.Route
+import graft.route.{Isochrone, Route}
 
 /** Routing parity with the reference's README Dijkstra example
   * (`README.md:59-74`): stock shortest path over the star fixture.
@@ -95,6 +95,83 @@ class RouteSpec extends AnyFunSuite {
         assert(math.abs(d.map(_._2).getOrElse(-1.0) - s.map(_._2).getOrElse(-1.0)) < 1e-9,
           s"A* vs Dijkstra cost mismatch $a -> $b")
       }
+    }
+  }
+
+  test("equal-cost alternates on a grid resolve to the pinned paths") {
+    // 4x4 grid, every edge both ways at 100 m (above the ~55 m great-circle
+    // hop, so the A* heuristic stays admissible): all 20 monotone
+    // corner-to-corner routes cost 600, and the search's tie order picks one
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions._
+    val n = 4
+    def id(i: Int, j: Int) = s"$i,$j"
+    val nDf = (for (i <- 0 until n; j <- 0 until n)
+      yield (id(i, j), -122.31 + i * 5e-4, 47.65 + j * 5e-4)).toDF("_n", "lon", "lat")
+      .select(col("_n"), struct(lit("Point").as("type"),
+        array(col("lon"), col("lat")).as("coordinates")).as("geom"))
+    val eDf = (for {
+      i <- 0 until n; j <- 0 until n
+      (di, dj) <- Seq((1, 0), (0, 1)) if i + di < n && j + dj < n
+      (a, b) <- Seq((id(i, j), id(i + di, j + dj)), (id(i + di, j + dj), id(i, j)))
+    } yield (a, b, 100.0)).toDF("_u", "_v", "_length")
+    val grid = new PropertyGraph(nDf, eDf)
+    val found = for ((u, v) <- Seq(("0,0", "3,3"), ("3,0", "0,3"))) yield
+      (Route.shortestPath(grid, u, v, "_length"), Route.shortestPathAStar(grid, u, v))
+    // pinned: a search change that reorders ties changes these user-visible routes
+    assert(found == Seq(
+      (Some((Seq("0,0", "1,0", "1,1", "1,2", "2,2", "3,2", "3,3"), 600.0)),
+        Some((Seq("0,0", "0,1", "0,2", "1,2", "2,2", "2,3", "3,3"), 600.0))),
+      (Some((Seq("3,0", "2,0", "2,1", "2,2", "1,2", "0,2", "0,3"), 600.0)),
+        Some((Seq("3,0", "3,1", "3,2", "2,2", "1,2", "1,3", "0,3"), 600.0)))), found)
+  }
+
+  test("gated searches equal the distributed paths on random digraphs " +
+    "(zero and null weights, parallel edges, self-loops, unreachable nodes)") {
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions._
+    val rnd = new scala.util.Random(20261019)
+    // half-metre weights keep every path sum exact, so costs compare with ==
+    def weight(): Option[Double] =
+      if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(7) * 0.5)
+    for (round <- 1 to 6) {
+      // node n-1 touches no edge: unreachable from everywhere
+      val n = 5 + rnd.nextInt(4)
+      def node() = rnd.nextInt(n - 1).toString
+      val random = Seq.fill(2 * n)((node(), node(), weight()))
+      val edges = random ++ Seq(
+        (random.head._1, random.head._2, weight()), // parallel to the first edge
+        { val a = node(); (a, a, weight()) },       // self-loop
+        (node(), node(), Some(0.0)),
+        (node(), node(), None))
+      val g = new PropertyGraph((0 until n).map(_.toString).toDF("_n"),
+        edges.toDF("_u", "_v", "_length"))
+      val hop = edges.collect { case (a, b, Some(w)) => (a, b) -> w }
+        .groupBy(_._1).map { case (k, ws) => k -> ws.map(_._2).min }
+      for (_ <- 1 to 2) {
+        val (a, b) = (rnd.nextInt(n).toString, rnd.nextInt(n).toString)
+        val local = Route.shortestPath(g, a, b, "_length")
+        val pregel = Route.shortestPathPregel(g, a, b, "_length")
+        assert(local.map(_._2) == pregel.map(_._2), s"round $round: $a -> $b")
+        local.foreach { case (path, cost) =>
+          assert(path.head == a && path.last == b, path)
+          assert(path.sliding(2).filter(_.size == 2)
+            .map(p => hop((p(0), p(1)))).sum == cost, path)
+        }
+      }
+      val lms = Seq(rnd.nextInt(n), rnd.nextInt(n)).map(_.toString)
+      def lmRows(maxLocal: Long) =
+        Route.landmarkDistances(spark, g, lms, "_length", maxLocal).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).sorted.toSeq
+      assert(lmRows(Route.LocalPathMaxEdges) == lmRows(-1), s"round $round: $lms")
+      val uvw = g.edges.select(col("_u").cast("long").as("u"),
+        col("_v").cast("long").as("v"), col("_length").as("w"))
+      val (src, cutoff) = (rnd.nextInt(n).toLong, 0.5 + rnd.nextInt(6) * 0.5)
+      def iso(maxLocal: Long) = Isochrone.isochrone(spark, uvw, src, cutoff, maxLocal)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val gated = iso(Route.LocalPathMaxEdges)
+      assert(gated == gated.sortBy(_._1), "gated isochrone is sorted by node")
+      assert(gated == iso(0).sorted, s"round $round: isochrone($src, $cutoff)")
     }
   }
 
