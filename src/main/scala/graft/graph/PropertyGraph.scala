@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.geo.GeoFunctions
+import graft.route.GraphIndex
 
 /** A directed property graph as two DataFrames — the Spark-native
   * equivalent of the reference's `GeoPackageNetwork` + `DiGraphDB`
@@ -104,6 +105,14 @@ class PropertyGraph(val nodes: DataFrame, val edges: DataFrame,
   private lazy val edgeCount: Long = edges.count()
   def order(): Long = nodeCount
   def size(): Long = edgeCount
+
+  /** The driver-side routing index on `weightCol`, built by the first call
+    * and kept per weight column — safe for the same reason as the counts.
+    */
+  private val routeIndexes =
+    new java.util.concurrent.ConcurrentHashMap[String, GraphIndex[String]]()
+  private[graft] def routeIndex(weightCol: String): GraphIndex[String] =
+    routeIndexes.computeIfAbsent(weightCol, w => GraphIndex.build(this, w))
 
   /** Sum of a weight column over all edges, or edge count when absent
     * (nx `size(weight)`, ref `graphs/digraphdb/__init__.py:62-66`).

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * Same two-path dispatch as [[Route.shortestPath]]:
   *
   *  - Below the gate, the driver search kernel ([[Route.search]]) with
-  *    the cutoff — the frontier never leaves the walkshed, so cost is
-  *    proportional to the reachable subgraph, not the whole graph.
+  *    the cutoff, on a [[GraphIndex]] built from the collected rows — the
+  *    frontier never leaves the walkshed, so search cost is proportional
+  *    to the reachable subgraph, not the whole graph.
   *  - Above it, bounded frontier relaxation: per round one join of the
   *    improved frontier against the symmetric edge relation + a min
   *    partial agg, discarding candidates beyond the cutoff BEFORE the
@@ -39,13 +40,17 @@ object Isochrone {
     val canon = edges.select(col("u").cast("long"), col("v").cast("long"),
       col("w").cast("double")).filter(col("u") =!= col("v"))
     if (Route.fitsLocally(canon, maxLocalEdges)) {
-      // both directions of each edge, newest edge first per node
-      val adjacency = canon.filter(col("w").isNotNull)
-        .as[(Long, Long, Double)].collect().reverseIterator
-        .flatMap { case (u, v, w) => Iterator(u -> (v, w), v -> (u, w)) }
-        .toArray.groupBy(_._1).map { case (n, es) => n -> es.map(_._2) }
-      return Route.search(adjacency, source, cutoff = cutoff).dist.toSeq
-        .sortBy(_._1).toDF("node", "dist")
+      // a throwaway index (the input is a DataFrame, so nothing to cache
+      // it on): both directions of each edge, newest edge first per node;
+      // the source is its one node-table node, so it has an id even with
+      // no edge
+      val rows = canon.filter(col("w").isNotNull).as[(Long, Long, Double)].collect().reverse
+      val ix = GraphIndex(Array(source), Array(Double.NaN), Array(Double.NaN),
+        rows.flatMap(r => Array(r._1, r._2)), rows.flatMap(r => Array(r._2, r._1)),
+        rows.flatMap(r => Array(r._3, r._3)))
+      val s = Route.search(ix, ix.id(source), cutoff = cutoff)
+      return s.order.map(n => (ix.ids(n), s.dist(n))).sortBy(_._1).toSeq
+        .toDF("node", "dist")
     }
     isochroneDistributed(spark, canon, source, cutoff, maxRounds)
   }

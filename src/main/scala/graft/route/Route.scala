@@ -254,58 +254,55 @@ object Route {
     edges.limit((bound + 1).max(0L).toInt).count() <= bound
   }
 
-  /** Which of `ids` are nodes of `g`, in one job for all of them. */
-  private def knownNodes(g: PropertyGraph, ids: Seq[String]): Set[String] =
-    g.nodes.filter(col("_n").isin(ids.distinct: _*)).select("_n")
-      .collect().map(_.getString(0)).toSet
-
-  /** node -> (neighbour, weight) in collect order; null weights dropped. */
-  private def collectAdjacency(g: PropertyGraph,
-      weightCol: String): Map[String, Array[(String, Double)]] =
-    g.edges
-      .filter(col(weightCol).isNotNull)
-      .select(col("_u"), col("_v"), col(weightCol).cast("double"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) => k -> rows.map(r => (r.getString(1), r.getDouble(2))) }
-
-  private[graft] final case class Settled[N](dist: mutable.HashMap[N, Double],
-      pred: mutable.HashMap[N, N], settled: mutable.HashSet[N])
-
-  /** The one driver-side search kernel: Dijkstra from `source` over an
-    * in-memory adjacency (weights ≥ 0), keyed on g + `h`, so an admissible
-    * `h` makes it A*. It stops once `target` is settled and drops any
-    * relaxation costing more than `cutoff`. Ties dequeue in heap order, the
-    * same on every call (RouteSpec pins them).
+  /** What one [[search]] reached, by int id of its [[GraphIndex]]: `dist`
+    * (+inf where unreached), `pred` (-1 at the source and where unreached)
+    * and `order`, the settled ids in settle order.
     */
-  private[graft] def search[N](adjacency: collection.Map[N, Array[(N, Double)]],
-      source: N, target: Option[N] = None,
+  private[graft] final class Settled(val dist: Array[Double], val pred: Array[Int],
+      val order: Array[Int])
+
+  /** The one driver-side search kernel: Dijkstra from `source` over the
+    * index's adjacency (weights ≥ 0), keyed on g + `h`, so an admissible
+    * `h` makes it A*. It stops once `target` is settled (-1: never) and
+    * drops any relaxation costing more than `cutoff`. Ties dequeue in heap
+    * order, the same on every call (RouteSpec pins them).
+    */
+  private[graft] def search(ix: GraphIndex[_], source: Int, target: Int = -1,
       cutoff: Double = Double.PositiveInfinity,
-      h: N => Double = (_: N) => 0.0): Settled[N] = {
-    val dist = mutable.HashMap[N, Double](source -> 0.0)
-    val pred = mutable.HashMap[N, N]()
-    val done = mutable.HashSet[N]()
-    val pq = mutable.PriorityQueue[(Double, N)]()(
-      Ordering.by[(Double, N), Double](_._1).reverse)
-    val noEdges = Array.empty[(N, Double)]
+      h: Int => Double = _ => 0.0): Settled = {
+    val dist = Array.fill(ix.size)(Double.PositiveInfinity)
+    val pred = Array.fill(ix.size)(-1)
+    val done = new Array[Boolean](ix.size)
+    val order = new Array[Int](ix.size)
+    var settled = 0
+    val pq = mutable.PriorityQueue[(Double, Int)]()(
+      Ordering.by[(Double, Int), Double](_._1).reverse)
+    dist(source) = 0.0
     pq.enqueue((h(source), source))
     while (pq.nonEmpty) {
       val n = pq.dequeue()._2
-      if (!done.contains(n)) {
-        done += n
-        if (target.contains(n)) return Settled(dist, pred, done)
-        val d = dist(n)
-        adjacency.getOrElse(n, noEdges).foreach { case (m, w) =>
-          val nd = d + w
-          if (nd <= cutoff && nd < dist.getOrElse(m, Double.PositiveInfinity)) {
-            dist(m) = nd
-            pred(m) = n
-            pq.enqueue((nd + h(m), m))
+      if (!done(n)) {
+        done(n) = true
+        order(settled) = n
+        settled += 1
+        if (n == target) pq.clear()
+        else {
+          val d = dist(n)
+          var e = ix.offsets(n)
+          while (e < ix.offsets(n + 1)) {
+            val m = ix.targets(e)
+            val nd = d + ix.weights(e)
+            if (nd <= cutoff && nd < dist(m)) {
+              dist(m) = nd
+              pred(m) = n
+              pq.enqueue((nd + h(m), m))
+            }
+            e += 1
           }
         }
       }
     }
-    Settled(dist, pred, done)
+    new Settled(dist, pred, java.util.Arrays.copyOf(order, settled))
   }
 
   /** Point-to-point shortest path — dispatches to the driver-side fast
@@ -316,13 +313,14 @@ object Route {
     if (gated(g, LocalPathMaxEdges)) shortestPathLocal(g, u, v, weightCol)
     else shortestPathPregel(g, u, v, weightCol)
 
-  /** Driver-side Dijkstra over a collected adjacency list — one collect,
-    * then pure in-memory search; the latency-parity path for repeated
-    * interactive queries on metro-scale graphs.
+  /** Driver-side Dijkstra on the graph's [[GraphIndex]] — built by the
+    * first call, so every later call on the same graph is a pure in-memory
+    * search; the latency-parity path for repeated interactive queries on
+    * metro-scale graphs.
     */
   def shortestPathLocal(g: PropertyGraph, u: String, v: String,
       weightCol: String): Option[(Seq[String], Double)] =
-    localPath(g, u, v, weightCol, _ => 0.0)
+    localPath(g, u, v, weightCol, astar = false)
 
   /** A* point-to-point search with the great-circle (haversine) heuristic —
     * the standard road-network accelerator over plain Dijkstra. Admissible
@@ -347,35 +345,28 @@ object Route {
       weightCol: String = "_length",
       maxLocalEdges: Long = LocalPathMaxEdges): Option[(Seq[String], Double)] =
     if (!gated(g, maxLocalEdges)) shortestPathPregel(g, u, v, weightCol)
-    else localPath(g, u, v, weightCol, {
-      val coords: Map[String, (Double, Double)] = g.nodes
-        .filter(col("geom").isNotNull)
-        .select(col("_n"), col("geom.coordinates"))
-        .collect()
-        .flatMap { r =>
-          val c = r.getSeq[Double](1)
-          if (c != null && c.length >= 2) Some(r.getString(0) -> (c.head, c(1))) else None
-        }.toMap
-      val target = coords.get(v)
-      n => (coords.get(n), target) match {
-        case (Some((lon, lat)), Some((tl, tt))) => graft.geo.Geo.haversine(lon, lat, tl, tt)
-        case _ => 0.0
-      }
-    })
+    else localPath(g, u, v, weightCol, astar = true)
 
-  /** The gated point-to-point route: one lookup for both endpoints, then
-    * the kernel from `u` to `v` under `h` (built only when both exist).
+  /** The gated point-to-point route on the graph's cached [[GraphIndex]]:
+    * the kernel from `u` to `v`, under the great-circle distance to `v`
+    * when `astar` (0 where either end has no coordinates).
     */
   private def localPath(g: PropertyGraph, u: String, v: String, weightCol: String,
-      h: => String => Double): Option[(Seq[String], Double)] = {
-    val known = knownNodes(g, Seq(u, v))
-    if (!known(u) || !known(v)) return None
-    if (u == v) return Some((Seq(u), 0.0))
-    val s = search(collectAdjacency(g, weightCol), u, Some(v), h = h)
-    if (!s.settled(v)) return None
-    var path = List(v)
-    while (path.head != u) path ::= s.pred(path.head)
-    Some((path, s.dist(v)))
+      astar: Boolean): Option[(Seq[String], Double)] = {
+    val ix = g.routeIndex(weightCol)
+    val (s, t) = (ix.nodeId(u), ix.nodeId(v))
+    if (s < 0 || t < 0) return None
+    if (s == t) return Some((Seq(u), 0.0))
+    val (tLon, tLat) = (ix.lon(t), ix.lat(t))
+    val h: Int => Double =
+      if (!astar || tLon.isNaN) _ => 0.0
+      else n => if (ix.lon(n).isNaN) 0.0
+        else graft.geo.Geo.haversine(ix.lon(n), ix.lat(n), tLon, tLat)
+    val r = search(ix, s, t, h = h)
+    if (r.dist(t).isInfinite) return None
+    var path = List(t)
+    while (path.head != s) path ::= r.pred(path.head)
+    Some((path.map(ix.ids(_)), r.dist(t)))
   }
 
   /** Distributed point-to-point Dijkstra via the SSSP Pregel program —
@@ -426,6 +417,10 @@ object Route {
     * (vertex state = landmark→distance map, messages merge per-landmark
     * minima) — the batch form of repeated SSSP for distance matrices /
     * reachability analytics. Returns (_n, landmark, distance).
+    *
+    * Row order: below the gate, landmarks in first-appearance order, each
+    * landmark's rows in settle order (nearest first, the landmark itself
+    * first); above it, unspecified.
     */
   def landmarkDistances(spark: SparkSession, g: PropertyGraph,
       landmarks: Seq[String], weightCol: String,
@@ -434,19 +429,19 @@ object Route {
     require(landmarks.nonEmpty && landmarks.size <= 64,
       "1..64 landmarks per pass (state size is |landmarks| per vertex)")
     // small-graph gate, same dispatch as [[shortestPath]]: one kernel
-    // search per landmark over a single collected adjacency beats
-    // |landmarks| maps carried through O(diameter) Pregel supersteps on
+    // search per landmark on the graph's cached index beats |landmarks|
+    // maps carried through O(diameter) Pregel supersteps on
     // interactive-sized graphs. Emits exactly the Pregel pass's rows —
     // reachable (node, landmark) pairs only, landmark self-distance 0
     // (RouteSpec pins gated == distributed).
     if (gated(g, maxLocalEdges)) {
-      val missingL = landmarks.distinct.filterNot(knownNodes(g, landmarks))
+      val ix = g.routeIndex(weightCol)
+      val missingL = landmarks.distinct.filter(ix.nodeId(_) < 0)
       require(missingL.isEmpty,
         s"unknown landmark node(s): ${missingL.mkString(", ")}")
-      val adjacency = collectAdjacency(g, weightCol)
       return landmarks.distinct.flatMap { lm =>
-        val s = search(adjacency, lm)
-        s.settled.iterator.map(n => (n, lm, s.dist(n)))
+        val s = search(ix, ix.nodeId(lm))
+        s.order.iterator.map(n => (ix.ids(n), lm, s.dist(n)))
       }.toDF("_n", "landmark", "distance")
     }
     val rg = fromPropertyGraph(g, weightCol)
@@ -695,8 +690,8 @@ object Route {
     // with the gate forced off), so results are identical either way.
     if (gated(g, maxLocalEdges)) {
       import spark.implicits._
-      val nodeSet = g.nodes.select("_n").collect().map(_.getString(0)).toSet
-      val missing = sources.distinct.filterNot(nodeSet)
+      val ix = g.routeIndex(weightCol)
+      val missing = sources.distinct.filter(ix.nodeId(_) < 0)
       require(missing.isEmpty,
         s"unknown source node(s) among: ${sources.distinct.mkString(", ")}")
       return betweennessLocal(g, weightCol, Some(sources.distinct))
@@ -750,7 +745,7 @@ object Route {
     * job, so a fixpoint's per-round cost stays visible), then restores the
     * caller's description.
     */
-  private def withJobDescription[T](sc: org.apache.spark.SparkContext,
+  private[route] def withJobDescription[T](sc: org.apache.spark.SparkContext,
       tag: String)(body: => T): T = {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(tag)
@@ -904,60 +899,63 @@ object Route {
     deltas
   }
 
-  /** Driver-side exact Brandes over a collected adjacency list — the
+  /** Driver-side exact Brandes on the graph's cached [[GraphIndex]] — the
     * interactive path for gated graph sizes and the independent reference
     * implementation the distributed fixpoint is tested against, so it keeps
     * its own loop rather than the [[search]] kernel (it also counts
-    * equal-cost paths). Returns every node (zeros included).
+    * equal-cost paths). Returns every node-table node (zeros included) and
+    * every other node some source reached.
     */
   def betweennessLocal(g: PropertyGraph, weightCol: String,
       sources: Option[Seq[String]] = None): Map[String, Double] = {
     require(g.size() <= LocalPathMaxEdges,
       s"graph exceeds $LocalPathMaxEdges edges; use betweenness() (distributed)")
-    val adjacency = collectAdjacency(g, weightCol)
-    val nodes = g.nodes.select("_n").collect().map(_.getString(0)).toSeq
-    val bc = scala.collection.mutable.HashMap[String, Double]()
-    nodes.foreach(n => bc(n) = 0.0)
-    sources.getOrElse(nodes).distinct.foreach { s =>
-      val dist = scala.collection.mutable.HashMap[String, Double]()
-      val sigma = scala.collection.mutable.HashMap[String, Double]()
-      val preds = scala.collection.mutable.HashMap[String,
-        scala.collection.mutable.ListBuffer[String]]()
-      val settled = scala.collection.mutable.ListBuffer[String]()
-      val done = scala.collection.mutable.HashSet[String]()
-      val pq = scala.collection.mutable.PriorityQueue[(Double, String)]()(
-        Ordering.by[(Double, String), Double](_._1).reverse)
+    val ix = g.routeIndex(weightCol)
+    val n = ix.size
+    val bc = new Array[Double](n)
+    val scored = Array.tabulate(n)(_ < ix.tableNodes)
+    val srcs = sources.getOrElse(ix.ids.take(ix.tableNodes).toSeq).distinct
+      .map(ix.id).filter(_ >= 0)
+    srcs.foreach { s =>
+      val dist = Array.fill(n)(Double.PositiveInfinity)
+      val sigma = new Array[Double](n)
+      val preds = Array.fill[List[Int]](n)(Nil) // newest first
+      val settled = mutable.ArrayBuffer[Int]()
+      val done = new Array[Boolean](n)
+      val pq = mutable.PriorityQueue[(Double, Int)]()(
+        Ordering.by[(Double, Int), Double](_._1).reverse)
       dist(s) = 0.0; sigma(s) = 1.0
       pq.enqueue((0.0, s))
       while (pq.nonEmpty) {
         val (d, v) = pq.dequeue()
-        if (!done.contains(v)) {
-          done += v
+        if (!done(v)) {
+          done(v) = true
           settled += v
-          adjacency.getOrElse(v, Array.empty).foreach { case (w, wt) =>
-            val nd = d + wt
-            val old = dist.getOrElse(w, Double.PositiveInfinity)
-            if (nd < old) {
+          var e = ix.offsets(v)
+          while (e < ix.offsets(v + 1)) {
+            val w = ix.targets(e)
+            val nd = d + ix.weights(e)
+            if (nd < dist(w)) {
               dist(w) = nd
               sigma(w) = sigma(v)
-              preds(w) = scala.collection.mutable.ListBuffer(v)
+              preds(w) = v :: Nil
               pq.enqueue((nd, w))
-            } else if (nd == old) {
+            } else if (nd == dist(w)) {
               sigma(w) += sigma(v)
-              preds(w) += v
+              preds(w) = v :: preds(w)
             }
+            e += 1
           }
         }
       }
-      val delta = scala.collection.mutable.HashMap[String, Double]()
+      val delta = new Array[Double](n)
       settled.reverseIterator.foreach { w =>
-        preds.getOrElse(w, Nil).foreach { v =>
-          delta(v) = delta.getOrElse(v, 0.0) +
-            sigma(v) / sigma(w) * (1.0 + delta.getOrElse(w, 0.0))
+        preds(w).reverseIterator.foreach { v =>
+          delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
         }
-        if (w != s) bc(w) = bc.getOrElse(w, 0.0) + delta.getOrElse(w, 0.0)
+        if (w != s) { bc(w) += delta(w); scored(w) = true }
       }
     }
-    bc.toMap
+    (0 until n).iterator.filter(scored).map(i => ix.ids(i) -> bc(i)).toMap
   }
 }

@@ -153,6 +153,9 @@ class RouteSpec extends AnyFunSuite {
         val local = Route.shortestPath(g, a, b, "_length")
         val pregel = Route.shortestPathPregel(g, a, b, "_length")
         assert(local.map(_._2) == pregel.map(_._2), s"round $round: $a -> $b")
+        // `_n`-only nodes: the heuristic is 0 and A* is Dijkstra
+        assert(Route.shortestPathAStar(g, a, b).map(_._2) == pregel.map(_._2),
+          s"round $round: A* $a -> $b")
         local.foreach { case (path, cost) =>
           assert(path.head == a && path.last == b, path)
           assert(path.sliding(2).filter(_.size == 2)
