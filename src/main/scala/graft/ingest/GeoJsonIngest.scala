@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, NumericType, StructType}
@@ -187,6 +187,101 @@ object GeoJsonIngest {
     }
 
     side(rev = false).unionByName(side(rev = true))
+  }
+
+  // ================ Feature-line bridge (every other format) ================
+  //
+  // The KML, GML, OSM XML, OSM PBF and shapefile readers keep only their
+  // parsers: each renders its features with [[featureLine]] and hands the
+  // lines to [[fromLines]], so node-id formatting, LineString filtering,
+  // reverse edges, sign flips, `_length`, fids and the dynamic property
+  // schema are byte-identical to a GeoJSON build of the same data.
+
+  /** Feature lines (`_layer`, `pos`, `geometry`, optional `properties`)
+    * → the canonical edges frame: JSON schema inference, then the
+    * [[fromFeatures]] pipeline with the fid mode of `paths`. `what` names
+    * the format's features in the error for input with none.
+    */
+  private[ingest] def fromLines(spark: SparkSession, lines: Dataset[String],
+      paths: Seq[String], opts: Options, what: String): DataFrame = {
+    val raw = spark.read.json(lines)
+    require(raw.schema.fieldNames.contains("geometry"), s"no parseable $what in $paths")
+    val fStruct =
+      if (raw.schema.fieldNames.contains("properties"))
+        struct(col("geometry"), col("properties"))
+      else struct(col("geometry"))
+    val feats = raw
+      .select(col("_layer"), col("pos"), fStruct.as("f"))
+      .filter(col("f.geometry.type") === "LineString")
+    fromFeatures(feats, propsOf(raw.schema), opts, denseByGate(spark, paths, opts))
+  }
+
+  /** The feature lines `render` makes of each path, one task per path (a
+    * DOM or shapefile parse is file-local; a directory of files ingests
+    * cluster-parallel).
+    */
+  private[ingest] def perFile(spark: SparkSession, paths: Seq[String])(
+      render: String => Iterator[String]): Dataset[String] = {
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(paths, paths.size).flatMap(render))
+  }
+
+  /** Whole-file read for the file-local parsers. A JVM array holds just
+    * under 2 GiB, so a larger file is refused by name before allocating;
+    * the formats that split within files take such inputs.
+    */
+  private[ingest] def readFile(p: String): Array[Byte] = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val len = fs.getFileStatus(path).getLen
+    require(len <= Int.MaxValue - 8,
+      s"$p is $len bytes, over the ${Int.MaxValue - 8}-byte whole-file read limit; " +
+        "convert it to .osm.pbf or newline-delimited GeoJSON (.geojsonl), which split")
+    val buf = new Array[Byte](len.toInt)
+    val in = fs.open(path)
+    try in.readFully(0, buf) finally in.close()
+    buf
+  }
+
+  /** One GeoJSON Feature line for a LineString. `props` values are JSON
+    * already (see [[sniffJson]], [[jsonString]]); `properties` is left out
+    * when there are none, as absent properties infer no columns.
+    */
+  private[ingest] def featureLine(layer: String, pos: Long,
+      coords: Seq[(Double, Double)], props: Iterable[(String, String)]): String = {
+    val coordJson = coords.map { case (x, y) => s"[${fmtDouble(x)},${fmtDouble(y)}]" }
+      .mkString("[", ",", "]")
+    val propJson =
+      if (props.isEmpty) ""
+      else props.map { case (k, vj) => s"${jsonString(k)}:$vj" }
+        .mkString(""","properties":{""", ",", "}")
+    s"""{"_layer":${jsonString(layer)},"pos":$pos,""" +
+      s""""geometry":{"type":"LineString","coordinates":$coordJson}$propJson}"""
+  }
+
+  /** Untyped text attribute (KML, GML, OSM tags) as JSON: a number when
+    * the text is one (long, then double), a string otherwise.
+    */
+  private[ingest] def sniffJson(raw: String): String =
+    if (raw.matches("[+-]?\\d+"))
+      try raw.toLong.toString catch { case _: NumberFormatException => jsonString(raw) }
+    else if (raw.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?"))
+      try fmtDouble(raw.toDouble) catch { case _: NumberFormatException => jsonString(raw) }
+    else jsonString(raw)
+
+  private[ingest] def fmtDouble(d: Double): String =
+    if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) s"${d.toLong}.0"
+    else d.toString
+
+  private[ingest] def jsonString(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
   }
 
   /** Node table from edge endpoints (ref `edge_table.py:5-33`): distinct

@@ -3,7 +3,6 @@ package graft.ingest
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.w3c.dom.Element
 
 /** OGC GML → canonical edges DataFrame — another concrete format of the
@@ -11,13 +10,11 @@ import org.w3c.dom.Element
   * fiona, whose OGR backend includes the GML driver). Parsed with the
   * JDK's hardened XML stack (shared with [[KmlIngest]]).
   *
-  * Architecture (same as [[KmlIngest]] / [[ShapefileIngest]]): each
-  * `.gml` file parses into GeoJSON Feature JSON lines which feed the
-  * exact [[GeoJsonIngest]] pipeline — node-id formatting, LineString
-  * filtering, reverse edges, sign flips, `_length`, fids and dynamic
-  * property schema are byte-identical to a GeoJSON build of the same
-  * data, by construction. One task per file; a directory of GML files
-  * ingests cluster-parallel.
+  * Architecture: this object is only the parser. Each `.gml` file
+  * renders its features with [[GeoJsonIngest.featureLine]] and the lines
+  * go through [[GeoJsonIngest.fromLines]], so the edges are
+  * byte-identical to a GeoJSON build of the same data, by construction.
+  * One task per file; a directory of GML files ingests cluster-parallel.
   *
   * Feature model: every `<gml:featureMember>` / `<gml:featureMembers>` /
   * WFS `<member>` child element is a feature. Simple-content child
@@ -40,33 +37,11 @@ object GmlIngest {
   def readEdges(spark: SparkSession, paths: Seq[String],
       opts: GeoJsonIngest.Options = GeoJsonIngest.Options()): DataFrame = {
     require(paths.nonEmpty, "no gml paths")
-    val lines = spark.sparkContext.parallelize(paths, paths.size).flatMap { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val in = fs.open(path)
-      val bytes =
-        try {
-          val len = fs.getFileStatus(path).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          buf
-        } finally in.close()
-      featureJsonLines(bytes, path.getName.replaceAll("(?i)\\.gml$", ""))
+    val lines = GeoJsonIngest.perFile(spark, paths) { p =>
+      featureJsonLines(GeoJsonIngest.readFile(p),
+        new org.apache.hadoop.fs.Path(p).getName.replaceAll("(?i)\\.gml$", ""))
     }
-    import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(lines))
-    require(raw.schema.fieldNames.contains("geometry"),
-      s"no parseable GML LineString features in $paths")
-    val fStruct =
-      if (raw.schema.fieldNames.contains("properties"))
-        struct(col("geometry"), col("properties"))
-      else struct(col("geometry"))
-    val feats = raw
-      .select(col("_layer"), col("pos"), fStruct.as("f"))
-      .filter(col("f.geometry.type") === "LineString")
-    GeoJsonIngest.fromFeatures(feats, GeoJsonIngest.propsOf(raw.schema), opts,
-      GeoJsonIngest.denseByGate(spark, paths, opts))
+    GeoJsonIngest.fromLines(spark, lines, paths, opts, "GML LineString features")
   }
 
   /** Member container local names: GML 2/3 `featureMember(s)` plus the
@@ -76,7 +51,7 @@ object GmlIngest {
 
   /** GeoJSON Feature JSON lines for every LineString feature. */
   private[graft] def featureJsonLines(xml: Array[Byte], layer: String): Iterator[String] = {
-    import ShapefileIngest.{fmtDouble, jsonString}
+    import GeoJsonIngest.{featureLine, sniffJson}
     val doc = KmlIngest.secureBuilder().parse(new ByteArrayInputStream(xml))
     val members = doc.getElementsByTagNameNS("*", "*")
     val features = (0 until members.getLength).iterator.map(members.item)
@@ -93,14 +68,7 @@ object GmlIngest {
             if (v.nonEmpty) props(c.getLocalName) = sniffJson(v)
           }
         }
-        val coordJson = coords.map(c =>
-          s"[${fmtDouble(c._1)},${fmtDouble(c._2)}]").mkString("[", ",", "]")
-        val propJson =
-          if (props.isEmpty) ""
-          else props.map { case (k, vj) => s"${jsonString(k)}:$vj" }
-            .mkString(""","properties":{""", ",", "}")
-        Iterator(s"""{"_layer":${jsonString(layer)},"pos":${i + 1},""" +
-          s""""geometry":{"type":"LineString","coordinates":$coordJson}$propJson}""")
+        Iterator(featureLine(layer, i + 1, coords, props))
       }
     }
   }
@@ -147,17 +115,5 @@ object GmlIngest {
           else None
         }
     }
-  }
-
-  /** Same untyped-text number sniffing as KML: JSON number when the text
-    * is one, string otherwise.
-    */
-  private def sniffJson(raw: String): String = {
-    import ShapefileIngest.{fmtDouble, jsonString}
-    if (raw.matches("[+-]?\\d+"))
-      try raw.toLong.toString catch { case _: NumberFormatException => jsonString(raw) }
-    else if (raw.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?"))
-      try fmtDouble(raw.toDouble) catch { case _: NumberFormatException => jsonString(raw) }
-    else jsonString(raw)
   }
 }

@@ -6,7 +6,6 @@ import javax.xml.XMLConstants
 import javax.xml.parsers.DocumentBuilderFactory
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.w3c.dom.Element
 
 /** OGC KML → canonical edges DataFrame — the third concrete format of the
@@ -15,15 +14,12 @@ import org.w3c.dom.Element
   * XML stack against the public OGC KML 2.2 schema; no GDAL in this
   * environment.
   *
-  * Architecture (same as [[ShapefileIngest]]): each `.kml` parses into
-  * GeoJSON Feature JSON lines which feed the exact [[GeoJsonIngest]]
-  * pipeline — node-id formatting, LineString filtering, reverse edges,
-  * sign flips, `_length`, fids and dynamic property schema are
-  * byte-identical to a GeoJSON build of the same data, by construction.
-  *
-  * Scale: one task per file (a DOM parse is file-local); a directory of
-  * KML files ingests cluster-parallel. The 100 TB path remains
-  * newline-delimited GeoJSON, which splits within files too.
+  * Architecture: this object is only the parser. Each `.kml` renders
+  * its placemarks with [[GeoJsonIngest.featureLine]] and the lines go
+  * through [[GeoJsonIngest.fromLines]], so the edges are byte-identical
+  * to a GeoJSON build of the same data, by construction. One task per
+  * file; the 100 TB path remains newline-delimited GeoJSON, which splits
+  * within files too.
   *
   * Semantics parity with the reference's LineString-only ingest
   * (`io.py:37-39`): only `<Placemark>`s whose geometry is a `<LineString>`
@@ -43,33 +39,11 @@ object KmlIngest {
   def readEdges(spark: SparkSession, paths: Seq[String],
       opts: GeoJsonIngest.Options = GeoJsonIngest.Options()): DataFrame = {
     require(paths.nonEmpty, "no kml paths")
-    val lines = spark.sparkContext.parallelize(paths, paths.size).flatMap { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val in = fs.open(path)
-      val bytes =
-        try {
-          val len = fs.getFileStatus(path).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          buf
-        } finally in.close()
-      featureJsonLines(bytes, path.getName.replaceAll("(?i)\\.kml$", ""))
+    val lines = GeoJsonIngest.perFile(spark, paths) { p =>
+      featureJsonLines(GeoJsonIngest.readFile(p),
+        new org.apache.hadoop.fs.Path(p).getName.replaceAll("(?i)\\.kml$", ""))
     }
-    import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(lines))
-    require(raw.schema.fieldNames.contains("geometry"),
-      s"no parseable KML LineString placemarks in $paths")
-    val fStruct =
-      if (raw.schema.fieldNames.contains("properties"))
-        struct(col("geometry"), col("properties"))
-      else struct(col("geometry"))
-    val feats = raw
-      .select(col("_layer"), col("pos"), fStruct.as("f"))
-      .filter(col("f.geometry.type") === "LineString")
-    GeoJsonIngest.fromFeatures(feats, GeoJsonIngest.propsOf(raw.schema), opts,
-      GeoJsonIngest.denseByGate(spark, paths, opts))
+    GeoJsonIngest.fromLines(spark, lines, paths, opts, "KML LineString placemarks")
   }
 
   /** Hardened DOM builder shared by the XML ingest formats (KML, GML,
@@ -109,7 +83,7 @@ object KmlIngest {
 
   /** GeoJSON Feature JSON lines for every LineString placemark. */
   private[graft] def featureJsonLines(xml: Array[Byte], layer: String): Iterator[String] = {
-    import ShapefileIngest.{fmtDouble, jsonString}
+    import GeoJsonIngest.{featureLine, jsonString, sniffJson}
     val doc = secureBuilder().parse(new ByteArrayInputStream(xml))
     val placemarks = doc.getElementsByTagNameNS("*", "Placemark")
     (0 until placemarks.getLength).iterator.flatMap { i =>
@@ -123,7 +97,7 @@ object KmlIngest {
         val parsed = tuples.flatMap { t =>
           val parts = t.split(",")
           if (parts.length >= 2)
-            try Some(Seq(parts(0).trim.toDouble, parts(1).trim.toDouble))
+            try Some((parts(0).trim.toDouble, parts(1).trim.toDouble))
             catch { case _: NumberFormatException => None }
           else None
         }
@@ -145,27 +119,8 @@ object KmlIngest {
             if (k.nonEmpty) props(k) = sniffJson(sd.getTextContent.trim)
           }
         }
-        val coordJson = coords.map(c =>
-          s"[${fmtDouble(c.head)},${fmtDouble(c(1))}]").mkString("[", ",", "]")
-        val propJson =
-          if (props.isEmpty) ""
-          else props.map { case (k, vj) => s"${jsonString(k)}:$vj" }
-            .mkString(""","properties":{""", ",", "}")
-        Iterator(s"""{"_layer":${jsonString(layer)},"pos":${i + 1},""" +
-          s""""geometry":{"type":"LineString","coordinates":$coordJson}$propJson}""")
+        Iterator(featureLine(layer, i + 1, coords, props))
       }
     }
-  }
-
-  /** KML attribute values are untyped text: emit a JSON number when the
-    * text is one, a string otherwise.
-    */
-  private def sniffJson(raw: String): String = {
-    import ShapefileIngest.{fmtDouble, jsonString}
-    if (raw.matches("[+-]?\\d+"))
-      try raw.toLong.toString catch { case _: NumberFormatException => jsonString(raw) }
-    else if (raw.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?"))
-      try fmtDouble(raw.toDouble) catch { case _: NumberFormatException => jsonString(raw) }
-    else jsonString(raw)
   }
 }

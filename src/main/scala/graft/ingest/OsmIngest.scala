@@ -3,7 +3,6 @@ package graft.ingest
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.w3c.dom.Element
 
 /** OpenStreetMap XML (`.osm`) → canonical edges DataFrame. OSM is the
@@ -22,11 +21,13 @@ import org.w3c.dom.Element
   * (number-sniffed, like the KML/GML readers — richer than OGR's
   * `other_tags` hstore but the same information), plus `osm_id`.
   *
-  * The resulting features feed the exact [[GeoJsonIngest]] pipeline, so
-  * node-id formatting, reverse edges, sign flips, `_length`, fids and
-  * property schema are byte-identical to a GeoJSON build of the same
-  * ways. One task per file; the 100 TB path remains newline-delimited
-  * GeoJSON (or pre-converted parquet), which splits within files.
+  * Architecture: this object is only the parser. Ways render with
+  * [[GeoJsonIngest.featureLine]] and the lines go through
+  * [[GeoJsonIngest.fromLines]], so node-id formatting, reverse edges,
+  * sign flips, `_length`, fids and property schema are byte-identical to
+  * a GeoJSON build of the same ways. One task per file; the 100 TB path
+  * remains `.osm.pbf` or newline-delimited GeoJSON, which split within
+  * files.
   */
 object OsmIngest {
 
@@ -36,30 +37,11 @@ object OsmIngest {
   def readEdges(spark: SparkSession, paths: Seq[String],
       opts: GeoJsonIngest.Options = GeoJsonIngest.Options()): DataFrame = {
     require(paths.nonEmpty, "no osm paths")
-    val lines = spark.sparkContext.parallelize(paths, paths.size).flatMap { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val in = fs.open(path)
-      val bytes =
-        try {
-          val len = fs.getFileStatus(path).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          buf
-        } finally in.close()
-      featureJsonLines(bytes, path.getName.replaceAll("(?i)\\.osm$", ""))
+    val lines = GeoJsonIngest.perFile(spark, paths) { p =>
+      featureJsonLines(GeoJsonIngest.readFile(p),
+        new org.apache.hadoop.fs.Path(p).getName.replaceAll("(?i)\\.osm$", ""))
     }
-    import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(lines))
-    require(raw.schema.fieldNames.contains("geometry"),
-      s"no parseable OSM ways in $paths")
-    val feats = raw
-      .select(col("_layer"), col("pos"),
-        struct(col("geometry"), col("properties")).as("f"))
-      .filter(col("f.geometry.type") === "LineString")
-    GeoJsonIngest.fromFeatures(feats, GeoJsonIngest.propsOf(raw.schema), opts,
-      GeoJsonIngest.denseByGate(spark, paths, opts))
+    GeoJsonIngest.fromLines(spark, lines, paths, opts, "OSM ways")
   }
 
   /** GeoJSON Feature JSON lines for every line-like way. */
@@ -103,27 +85,9 @@ object OsmIngest {
     */
   private[ingest] def featureLine(layer: String, pos: Long, osmId: Long,
       tags: Iterable[(String, String)], coords: Seq[(Double, Double)]): String = {
-    import ShapefileIngest.{fmtDouble, jsonString}
     val props = scala.collection.mutable.LinkedHashMap[String, String]()
     props("osm_id") = osmId.toString
-    tags.foreach { case (k, v) => if (k.nonEmpty) props(k) = sniffJson(v) }
-    val coordJson = coords.map(c =>
-      s"[${fmtDouble(c._1)},${fmtDouble(c._2)}]").mkString("[", ",", "]")
-    val propJson = props.map { case (k, vj) => s"${jsonString(k)}:$vj" }
-      .mkString(""","properties":{""", ",", "}")
-    s"""{"_layer":${jsonString(layer)},"pos":$pos,""" +
-      s""""geometry":{"type":"LineString","coordinates":$coordJson}$propJson}"""
-  }
-
-  /** OSM tag values are untyped text: emit a JSON number when the text
-    * is one, a string otherwise (same sniff as KML/GML).
-    */
-  private def sniffJson(raw: String): String = {
-    import ShapefileIngest.{fmtDouble, jsonString}
-    if (raw.matches("[+-]?\\d+"))
-      try raw.toLong.toString catch { case _: NumberFormatException => jsonString(raw) }
-    else if (raw.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?"))
-      try fmtDouble(raw.toDouble) catch { case _: NumberFormatException => jsonString(raw) }
-    else jsonString(raw)
+    tags.foreach { case (k, v) => if (k.nonEmpty) props(k) = GeoJsonIngest.sniffJson(v) }
+    GeoJsonIngest.featureLine(layer, pos, coords, props)
   }
 }

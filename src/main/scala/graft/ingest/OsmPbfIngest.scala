@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *    positions → regroup in ref order), not a per-file hash map — the
   *    planet's ~9B nodes never need to fit anywhere.
   *
-  * The resolved ways render as GeoJSON feature lines feeding the exact
-  * [[GeoJsonIngest]] pipeline, so node-id formatting, reverse edges,
+  * The resolved ways render with [[OsmIngest.featureLine]] (and so
+  * [[GeoJsonIngest.featureLine]]) and the distributed lines go through
+  * [[GeoJsonIngest.fromLines]], so node-id formatting, reverse edges,
   * sign flips, `_length`, fids and dynamic property schema are
   * byte-identical to a GeoJSON/XML build of the same data
   * (OsmPbfSpec proves row identity against [[OsmIngest]]). Tag model and
@@ -90,9 +91,9 @@ object OsmPbfIngest {
     // render GeoJSON feature lines → the shared dynamic-schema pipeline.
     // pos orders fids by (way id) within the layer — the PBF contract
     // keeps ways sorted, so this matches document order of an XML dump.
-    // The rendering runs the SAME Scala helpers as the XML readers
-    // (jsonString/fmtDouble/sniffJson), so downstream bytes are identical
-    // by construction.
+    // Rendering runs the XML reader's OsmIngest.featureLine (which calls
+    // GeoJsonIngest.featureLine) and GeoJsonIngest.fromLines takes the
+    // distributed lines, so downstream bytes are identical by construction.
     val lines = resolved
       .withColumn("pos", row_number().over(
         Window.partitionBy("_layer").orderBy("id")))
@@ -103,16 +104,7 @@ object OsmPbfIngest {
         OsmIngest.featureLine(layer, pos, id, tags,
           coords.map(c => (c(0), c(1))))
       }
-
-    val raw = spark.read.json(lines)
-    require(raw.schema.fieldNames.contains("geometry"),
-      s"no parseable OSM ways in $paths")
-    val feats = raw
-      .select(col("_layer"), col("pos"),
-        struct(col("geometry"), col("properties")).as("f"))
-      .filter(col("f.geometry.type") === "LineString")
-    GeoJsonIngest.fromFeatures(feats, GeoJsonIngest.propsOf(raw.schema), opts,
-      GeoJsonIngest.denseByGate(spark, paths, opts))
+    GeoJsonIngest.fromLines(spark, lines, paths, opts, "OSM ways")
   }
 
   // ---------------------------------------------------------------------

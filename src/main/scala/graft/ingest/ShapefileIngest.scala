@@ -3,7 +3,6 @@ package graft.ingest
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** ESRI Shapefile (.shp + companion .dbf) → canonical edges DataFrame —
   * the second concrete format of the reference's any-OGR-file ingest
@@ -11,11 +10,12 @@ import org.apache.spark.sql.functions._
   * two common inputs). Implemented byte-level against the published ESRI
   * whitepaper / dBASE III layout; no GDAL in this environment.
   *
-  * Architecture: each .shp parses into GeoJSON Feature JSON lines which
-  * feed the exact [[GeoJsonIngest]] pipeline — so node-id formatting,
-  * LineString filtering, reverse edges, sign flips, `_length`, fids and
-  * dynamic property schema are byte-identical to a GeoJSON build of the
-  * same data, by construction.
+  * Architecture: this object is only the parser. Each .shp renders its
+  * polylines with [[GeoJsonIngest.featureLine]] and the lines go through
+  * [[GeoJsonIngest.fromLines]] — so node-id formatting, LineString
+  * filtering, reverse edges, sign flips, `_length`, fids and dynamic
+  * property schema are byte-identical to a GeoJSON build of the same
+  * data, by construction.
   *
   * Scale: parsing is one task per file. A shapefile is capped at 2 GB by
   * its 32-bit offsets, so parallelism across files is the natural unit; a
@@ -42,38 +42,14 @@ object ShapefileIngest {
   def readEdges(spark: SparkSession, paths: Seq[String],
       opts: GeoJsonIngest.Options = GeoJsonIngest.Options()): DataFrame = {
     require(paths.nonEmpty, "no shapefile paths")
-    val lines = spark.sparkContext.parallelize(paths, paths.size).flatMap { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val shpPath = new org.apache.hadoop.fs.Path(p)
-      val fs = shpPath.getFileSystem(conf)
-      def slurp(path: org.apache.hadoop.fs.Path): Array[Byte] = {
-        val in = fs.open(path)
-        try {
-          val len = fs.getFileStatus(path).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          buf
-        } finally in.close()
-      }
-      val dbfPath = new org.apache.hadoop.fs.Path(
-        p.replaceAll("(?i)\\.shp$", ".dbf"))
-      val layer = shpPath.getName.replaceAll("(?i)\\.shp$", "")
-      featureJsonLines(slurp(shpPath),
-        if (fs.exists(dbfPath)) Some(slurp(dbfPath)) else None, layer)
+    val lines = GeoJsonIngest.perFile(spark, paths) { p =>
+      val dbf = new org.apache.hadoop.fs.Path(p.replaceAll("(?i)\\.shp$", ".dbf"))
+      val hasDbf = dbf.getFileSystem(new org.apache.hadoop.conf.Configuration()).exists(dbf)
+      featureJsonLines(GeoJsonIngest.readFile(p),
+        if (hasDbf) Some(GeoJsonIngest.readFile(dbf.toString)) else None,
+        new org.apache.hadoop.fs.Path(p).getName.replaceAll("(?i)\\.shp$", ""))
     }
-    import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(lines))
-    require(raw.schema.fieldNames.contains("geometry"),
-      s"no parseable shapefile features in $paths")
-    val fStruct =
-      if (raw.schema.fieldNames.contains("properties"))
-        struct(col("geometry"), col("properties"))
-      else struct(col("geometry"))
-    val feats = raw
-      .select(col("_layer"), col("pos"), fStruct.as("f"))
-      .filter(col("f.geometry.type") === "LineString")
-    GeoJsonIngest.fromFeatures(feats, GeoJsonIngest.propsOf(raw.schema), opts,
-      GeoJsonIngest.denseByGate(spark, paths, opts))
+    GeoJsonIngest.fromLines(spark, lines, paths, opts, "shapefile features")
   }
 
   // ============================ .shp geometry ============================
@@ -183,40 +159,19 @@ object ShapefileIngest {
 
   private[graft] def featureJsonLines(shp: Array[Byte], dbf: Option[Array[Byte]],
       layer: String): Iterator[String] = {
+    import GeoJsonIngest.{featureLine, fmtDouble, jsonString}
     val attrsFor: Int => Option[Seq[(String, Any)]] =
       dbf.map(parseDbf(_)._2).getOrElse(_ => Some(Nil))
     parseShp(shp).map { case (recNum, coords) =>
-      val props = attrsFor(recNum).getOrElse(Nil)
-      val coordJson = coords.map(c =>
-        s"[${fmtDouble(c.head)},${fmtDouble(c(1))}]").mkString("[", ",", "]")
-      val propJson =
-        if (props.isEmpty) ""
-        else props.map { case (k, v) =>
-          val vj = v match {
-            case s: String => jsonString(s)
-            case b: Boolean => b.toString
-            case d: Double => fmtDouble(d)
-            case other => other.toString
-          }
-          s"${jsonString(k)}:$vj"
-        }.mkString(""","properties":{""", ",", "}")
-      s"""{"_layer":${jsonString(layer)},"pos":$recNum,""" +
-        s""""geometry":{"type":"LineString","coordinates":$coordJson}$propJson}"""
+      val props = attrsFor(recNum).getOrElse(Nil).map { case (k, v) =>
+        k -> (v match {
+          case s: String => jsonString(s)
+          case b: Boolean => b.toString
+          case d: Double => fmtDouble(d)
+          case other => other.toString
+        })
+      }
+      featureLine(layer, recNum, coords.map(c => (c.head, c(1))), props)
     }
-  }
-
-  private[ingest] def fmtDouble(d: Double): String =
-    if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) s"${d.toLong}.0"
-    else d.toString
-
-  private[ingest] def jsonString(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
   }
 }

@@ -3,9 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
-/** Generic backward as-of join: for every left row, attach the latest
-  * right row with `right.ts <= left.ts` within the same key.
+/** Generic as-of joins: for every left row, attach the nearest right row
+  * within the same key — the latest with `right.ts <= left.ts`
+  * ([[backward]]) or the earliest with `right.ts >= left.ts` ([[forward]]).
   *
   * Implemented as union + ordered window (last_value of right-side columns
   * over the merged stream) rather than a per-key sort-merge — one shuffle
@@ -16,7 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  /** @param left      probe side
+  /** Backward as-of join: the latest right row with `right.ts <= left.ts`.
+    *
+    * @param left      probe side
     * @param right     reference side (its non-key/ts columns are appended,
     *                  null when no earlier right row exists)
     * @param keyCols   equality keys
@@ -24,7 +28,21 @@ object AsOfJoin {
     * @param rightCols right columns to carry (default: all but keys/ts)
     */
   def backward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      tsCol: String, rightCols: Seq[String] = Nil): DataFrame = {
+      tsCol: String, rightCols: Seq[String] = Nil): DataFrame =
+    asOf(left, right, keyCols, tsCol, rightCols, col(tsCol).asc)
+
+  /** Forward as-of join: for each left row, the EARLIEST right row with
+    * the same keys and `right.ts >= left.ts` (the mirror of [[backward]]
+    * — "next quote at or after", vs "latest quote at or before"). Same
+    * parameters; rows scan ts DESCENDING, so the last right row seen is
+    * the earliest one at or after.
+    */
+  def forward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      tsCol: String, rightCols: Seq[String] = Nil): DataFrame =
+    asOf(left, right, keyCols, tsCol, rightCols, col(tsCol).desc)
+
+  private def asOf(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      tsCol: String, rightCols: Seq[String], tsOrder: Column): DataFrame = {
     val carry = if (rightCols.nonEmpty) rightCols
       else right.columns.toSeq.filterNot(c => keyCols.contains(c) || c == tsCol)
     val collisions = carry.filter(left.columns.contains)
@@ -39,8 +57,7 @@ object AsOfJoin {
     val l = left
       .withColumn("_side", lit(1))
       .withColumn("_r", lit(null).cast(
-        org.apache.spark.sql.types.StructType(
-          carry.map(c => org.apache.spark.sql.types.StructField(c, right.schema(c).dataType)))))
+        StructType(carry.map(c => StructField(c, right.schema(c).dataType)))))
     val r = right
       .withColumn("_side", lit(0))
       .select(keyCols.map(col) ++ Seq(col(tsCol), col("_side"),
@@ -48,17 +65,19 @@ object AsOfJoin {
     val merged = l.unionByName(r, allowMissingColumns = true)
 
     // right rows sort before left rows at equal ts (side 0 < 1), so a left
-    // row at ts T sees right rows with ts <= T — backward as-of semantics.
-    // Among right rows tied on (key, ts), the carried row is the one whose
-    // carry hash is greatest — an arbitrary but deterministic choice,
-    // stable across runs/retries (a bare (ts, side) order would let the
-    // shuffle's arrival order pick the winner). Spark refuses to hash
-    // MapType, so the tie-break hashes only the map-free carry columns;
-    // if every carried column contains a map the tie stays arbitrary.
-    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => containsMap(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
+    // row at ts T sees right rows with ts <= T (ascending: backward) or
+    // ts >= T (descending: forward), and the running last-non-null is the
+    // nearest of them. Among right rows tied on (key, ts), the carried row
+    // is the one whose carry hash is greatest — an arbitrary but
+    // deterministic choice, stable across runs/retries (a bare (ts, side)
+    // order would let the shuffle's arrival order pick the winner). Spark
+    // refuses to hash MapType, so the tie-break hashes only the map-free
+    // carry columns; if every carried column contains a map the tie stays
+    // arbitrary.
+    def containsMap(dt: DataType): Boolean = dt match {
+      case _: MapType => true
+      case s: StructType => s.fields.exists(f => containsMap(f.dataType))
+      case a: ArrayType => containsMap(a.elementType)
       case _ => false
     }
     val hashable = carry.filterNot(c => containsMap(right.schema(c).dataType))
@@ -66,57 +85,7 @@ object AsOfJoin {
       if (hashable.isEmpty) Nil
       else Seq(xxhash64(hashable.map(c => col(s"_r.$c")): _*).asc)
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(tsCol).asc +: col("_side").asc +: tieBreak: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = merged.withColumn("_r", last(col("_r"), ignoreNulls = true).over(w))
-    filled.filter(col("_side") === 1)
-      .select(leftCols.map(col) ++ carry.map(c => col(s"_r.$c").as(c)): _*)
-  }
-
-  /** Forward as-of join: for each left row, the EARLIEST right row with
-    * the same keys and `right.ts >= left.ts` (the mirror of [[backward]]
-    * — "next quote at or after", vs "latest quote at or before").
-    *
-    * Same single-shuffle union + ordered-window shape: rows sort by ts
-    * DESCENDING with right before left at equal ts, and the window
-    * carries the last right row seen — which, scanning ts-descending, is
-    * the earliest right row at-or-after. Shuffle volume is |L|+|R| on
-    * the keys, never an interval product.
-    */
-  def forward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      tsCol: String, rightCols: Seq[String] = Nil): DataFrame = {
-    val carry = if (rightCols.nonEmpty) rightCols
-      else right.columns.toSeq.filterNot(c => keyCols.contains(c) || c == tsCol)
-    val collisions = carry.filter(left.columns.contains)
-    require(collisions.isEmpty,
-      s"as-of carry columns already exist on the left side: ${collisions.mkString(", ")} " +
-        "— rename them or pass explicit rightCols")
-    val leftCols = left.columns.toSeq
-    val l = left
-      .withColumn("_side", lit(1))
-      .withColumn("_r", lit(null).cast(
-        org.apache.spark.sql.types.StructType(
-          carry.map(c => org.apache.spark.sql.types.StructField(c, right.schema(c).dataType)))))
-    val r = right
-      .withColumn("_side", lit(0))
-      .select(keyCols.map(col) ++ Seq(col(tsCol), col("_side"),
-        struct(carry.map(col): _*).as("_r")): _*)
-    val merged = l.unionByName(r, allowMissingColumns = true)
-    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => containsMap(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
-      case _ => false
-    }
-    val hashable = carry.filterNot(c => containsMap(right.schema(c).dataType))
-    val tieBreak =
-      if (hashable.isEmpty) Nil
-      else Seq(xxhash64(hashable.map(c => col(s"_r.$c")): _*).asc)
-    // ts DESC: at equal (key, ts) the right row sorts first (side 0 < 1),
-    // so a left row at ts T sees right rows with ts >= T; the running
-    // last-non-null is then the MINIMUM-ts right row at or after T
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(tsCol).desc +: col("_side").asc +: tieBreak: _*)
+      .orderBy(tsOrder +: col("_side").asc +: tieBreak: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     val filled = merged.withColumn("_r", last(col("_r"), ignoreNulls = true).over(w))
     filled.filter(col("_side") === 1)

@@ -141,4 +141,13 @@ class ShapefileSpec extends AnyFunSuite {
     val sums = signed.agg(sum("w")).head.getLong(0)
     assert(sums == 0L) // each reverse edge negates w
   }
+
+  test("a .shp without its .dbf builds edges with no property columns") {
+    val d = Files.createTempDirectory("graft-shp-nodbf")
+    writeShp(d)
+    val edges = ShapefileIngest.readEdges(spark, Seq(d.resolve("star.shp").toString))
+    assert(edges.count() == 8)
+    assert(!edges.columns.contains("w"), edges.columns.mkString(", "))
+    assert(edges.columns.toSet == Set("_u", "_v", "geom", "_layer", "_length", "fid"))
+  }
 }
