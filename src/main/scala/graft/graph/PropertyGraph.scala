@@ -28,8 +28,8 @@ import graft.route.GraphIndex
 class PropertyGraph(val nodes: DataFrame, val edges: DataFrame,
     val cellDeg: Double = graft.spatial.Spatial.DefaultCellDeg,
     /** Physical cell-partitioned layout (one row per overlapped grid cell,
-      * from a stored package); spatial queries prune on it, while `edges`
-      * stays the logical one-row-per-edge set that counts/joins use.
+      * from a stored package); spatial queries prune it and keep one copy
+      * per edge, while `edges` is the logical set that counts/joins use.
       */
     val spatialEdges: Option[DataFrame] = None) {
 

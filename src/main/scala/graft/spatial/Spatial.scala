@@ -40,8 +40,8 @@ object Spatial {
 
   /** Materialize the envelope plus one row per overlapped grid cell —
     * an edge spanning several cells is stored in each (standard grid-file
-    * duplication), so cell pruning can never drop a long edge. Queries on
-    * a cell-partitioned frame dedup on (_u,_v) after pruning.
+    * duplication), so cell pruning can never drop a long edge. Readers keep
+    * one copy per edge with [[homeCell]], a row filter, not a dedup.
     */
   def withSpatialColumns(edges: DataFrame, cellDeg: Double = DefaultCellDeg): DataFrame = {
     val cs = col("geom.coordinates")
@@ -70,6 +70,13 @@ object Spatial {
     else for (r <- r0 to r1; c <- c0 to c1) yield r * 100000L + c
   }
 
+  /** Reference-point duplicate avoidance (Dittrich and Seeger, ICDE 2000):
+    * keep the copy whose `_cell` holds (x, y), a point in the edge's
+    * envelope (same arithmetic as [[coveredCells]]), and catch-all rows.
+    */
+  private[graft] def homeCell(x: Column, y: Column, cellDeg: Double): Column =
+    col(CellCol) === CatchAllCell || col(CellCol) === GeoFunctions.gridCell(x, y, cellDeg)
+
   private def ensureBBox(edges: DataFrame): DataFrame =
     if (edges.columns.contains(BBoxCol)) edges
     else edges.withColumn(BBoxCol, GeoFunctions.envelope(col("geom.coordinates")))
@@ -92,23 +99,18 @@ object Spatial {
     * When the frame carries the `_cell` partition column, a derived
     * cell-set predicate turns the query into a partition-pruned scan —
     * the columnar replacement for the reference's R-tree probe. Because an
-    * edge is stored once per overlapped cell, hits are deduped on the
-    * unique (_u,_v) key after pruning.
+    * edge is stored once per overlapped cell, a hit keeps the one copy that
+    * holds (max(min_x, left), max(min_y, bottom)), a point in both boxes.
     */
   def intersects(edges: DataFrame, left: Double, bottom: Double,
       right: Double, top: Double, cellDeg: Double = DefaultCellDeg): DataFrame = {
     val e = ensureBBox(edges)
-    val boxFilter = GeoFunctions.bboxIntersects(col(BBoxCol), left, bottom, right, top)
-    if (e.columns.contains(CellCol)) {
-      val pruned = cellsFor(left, bottom, right, top, cellDeg) match {
-        case Some(cells) => e.filter(col(CellCol).isin(cells: _*))
-        case None        => e
-      }
-      val deduped =
-        if (e.columns.contains("_u")) pruned.filter(boxFilter).dropDuplicates("_u", "_v")
-        else pruned.filter(boxFilter).distinct()
-      deduped
-    } else e.filter(boxFilter)
+    val hits = e.filter(GeoFunctions.bboxIntersects(col(BBoxCol), left, bottom, right, top))
+    if (!e.columns.contains(CellCol)) hits
+    else cellsFor(left, bottom, right, top, cellDeg)
+      .fold(hits)(cells => hits.filter(col(CellCol).isin(cells: _*)))
+      .filter(homeCell(greatest(col(s"$BBoxCol.min_x"), lit(left)),
+        greatest(col(s"$BBoxCol.min_y"), lit(bottom)), cellDeg))
   }
 
   /** Candidate set for a distance query: bbox of the point buffered by
@@ -132,8 +134,12 @@ object Spatial {
       .withColumn("_distance",
         GeoFunctions.pointLineDistance(lon, lat, col("geom.coordinates")))
       .filter(col("_distance") < distance)
-    if (sort) refined.orderBy("_distance") else refined
+    if (sort) nearestFirst(refined) else refined
   }
+
+  /** Ties broken by the frame's keys, so the order is not file order. */
+  private def nearestFirst(df: DataFrame): DataFrame =
+    df.orderBy(("_distance" +: Seq("_u", "_v", "_n").filter(df.columns.contains)).map(col): _*)
 
   /** Distributed proximity self-join on a planar point set: all pairs
     * within `dist` (SURVEY §2.4 J3 — the spatial join the reference only
@@ -167,10 +173,9 @@ object Spatial {
     */
   def nearestK(edges: DataFrame, lon: Double, lat: Double, k: Int,
       radius: Double = 10000.0, cellDeg: Double = DefaultCellDeg): DataFrame =
-    dwithinCandidates(edges, lon, lat, radius, cellDeg)
+    nearestFirst(dwithinCandidates(edges, lon, lat, radius, cellDeg)
       .withColumn("_distance",
-        GeoFunctions.pointLineDistance(lon, lat, col("geom.coordinates")))
-      .orderBy("_distance")
+        GeoFunctions.pointLineDistance(lon, lat, col("geom.coordinates"))))
       .limit(k)
 
   /** Exact count of candidate pairs the eps-cell 3×3 ring equi-join will

@@ -17,7 +17,8 @@ import graft.spatial.Spatial
   *                         (gpkg_contents / gpkg_spatial_ref_sys mirror)
   *   nodes/             -- parquet, sorted by _n (key lookups prune row groups)
   *   edges/             -- parquet, partitioned by _cell (spatial pruning),
-  *                         sorted by (_u, _v) within partitions (key joins)
+  *                         sorted by (_u, _v) within partitions (key joins),
+  *                         one row per (edge, overlapped cell): see [[load]]
   * ```
   *
   * Layout *is* the index (SURVEY §4): the reference's R-tree becomes the
@@ -136,13 +137,14 @@ object GraphPackage {
     else walkTree(p)(_.count(_.getFileName.toString.endsWith(".parquet")))
   }
 
+  /** Logical `edges`: each edge's row in its (min_x, min_y) corner's cell ([[Spatial.homeCell]]). */
   def load(spark: SparkSession, path: String): PropertyGraph = {
     val nodes = spark.read.parquet(s"$path/nodes")
     val physical = spark.read.parquet(s"$path/edges")
-    // physical layout stores one row per overlapped grid cell; the logical
-    // edge set (counts, joins, iteration) dedups back to one row per edge
-    val logical = physical.dropDuplicates("_u", "_v").drop(Spatial.CellCol)
-    new PropertyGraph(nodes, logical, readCellDeg(path), Some(physical))
+    val cellDeg = readCellDeg(path)
+    val logical = physical.filter(Spatial.homeCell(col(s"${Spatial.BBoxCol}.min_x"),
+      col(s"${Spatial.BBoxCol}.min_y"), cellDeg)).drop(Spatial.CellCol)
+    new PropertyGraph(nodes, logical, cellDeg, Some(physical))
   }
 
   /** cell_deg from metadata.json, so spatial partition pruning uses the

@@ -49,6 +49,25 @@ class PlanSpec extends AnyFunSuite {
     assert(g.dwithin(-122.3132940, 47.6598762, 0.1).count() == 2)
   }
 
+  test("reads of a loaded package plan no shuffle: lookups, count, spatial queries") {
+    val g = GraphPackage.load(spark, pkgDir)
+    val reads = Seq(
+      "getEdge" -> g.getEdge(Fixture.TestNode1, Fixture.TestNode2),
+      "successors" -> g.successors(Fixture.TestNode1),
+      "predecessors" -> g.predecessors(Fixture.TestNode1),
+      "intersects" -> g.intersects(-122.315, 47.659, -122.313, 47.660),
+      "dwithin" -> g.dwithin(-122.3132940, 47.6598762, 0.1),
+      "nearestK" -> g.nearestK(-122.3132940, 47.6598762, 3))
+    for ((name, df) <- reads) {
+      val p = plan(df)
+      assert(!p.contains("Exchange"), s"$name shuffles:\n$p")
+    }
+    // a global count gathers its partial counts into one partition
+    // (Exchange SinglePartition); what must be gone is a key shuffle
+    val c = plan(g.edges.groupBy().count())
+    assert(!c.contains("hashpartitioning"), s"size() shuffles on a key:\n$c")
+  }
+
   test("fk join broadcasts the small dimension") {
     val q = SparkEntry.queries("j1_join_fk")(spark, "/root/testdata/sf0.001")
     val p = plan(q)

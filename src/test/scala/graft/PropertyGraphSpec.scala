@@ -276,6 +276,27 @@ class PropertyGraphSpec extends AnyFunSuite {
     assert(g2.intersects(-122.31445, 47.65988, -122.31443, 47.65990).count() >= 2)
   }
 
+  test("two rows with one (_u,_v) both survive a save and load") {
+    // two features between the same endpoints: ingest keeps both rows per
+    // direction, and a load returns exactly the rows that were saved
+    val (a, b) = ("[-122.30, 47.60]", "[-122.29, 47.61]")
+    val feats = Seq(s"[$a, $b]", s"[$a, [-122.30, 47.61], $b]").zipWithIndex.map {
+      case (cs, i) => s"""{"type": "Feature", "properties": {"k": $i},
+        | "geometry": {"type": "LineString", "coordinates": $cs}}""".stripMargin
+    }
+    val tmp = Files.createTempDirectory("graft-twin")
+    val in = tmp.resolve("twin.geojson")
+    Files.writeString(in, s"""{"type": "FeatureCollection", "features": [${feats.mkString(",")}]}""")
+    val g0 = PropertyGraph.fromGeoJson(spark, Seq(in.toString))
+    assert(g0.size() == 4)
+    val dir = tmp.resolve("twin.graft").toString
+    GraphPackage.save(g0, dir, cellDeg = 0.005)
+    val g2 = GraphPackage.load(spark, dir)
+    assert(g2.size() == g0.size())
+    val (u, v) = ("-122.3, 47.6", "-122.29, 47.61")
+    assert(g2.getEdge(u, v).select("k").collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L))
+  }
+
   test("view refuses writes at the API level (M5)") {
     import spark.implicits._
     val v = g.view
