@@ -69,6 +69,25 @@ object GeoFunctions {
     (floor((lat + 90.0) / cellDeg) * lit(100000L) +
       floor((lon + 180.0) / cellDeg)).cast("long")
 
+  /** [[gridCell]] on doubles, for every cell a lon/lat box overlaps, row
+    * by row (the write-side explode and the read-side prune); None unless
+    * the rows × columns count is in 1 to `maxCells`.
+    */
+  def gridCells(minX: Double, minY: Double, maxX: Double, maxY: Double,
+      cellDeg: Double, maxCells: Int): Option[Array[Long]] = {
+    def at(deg: Double, offset: Double) = math.floor((deg + offset) / cellDeg).toLong
+    val r0 = at(minY, 90.0)
+    val c0 = at(minX, 180.0)
+    val rows = at(maxY, 90.0) - r0 + 1
+    val cols = at(maxX, 180.0) - c0 + 1
+    if (rows * cols <= 0 || rows * cols > maxCells) return None
+    // a box inverted on both axes has a positive count but no cell
+    val out = new Array[Long](if (rows < 0) 0 else (rows * cols).toInt)
+    var i = 0
+    while (i < out.length) { out(i) = (r0 + i / cols) * 100000L + c0 + i % cols; i += 1 }
+    Some(out)
+  }
+
   /** Node id "{lon}, {lat}" with Python-repr formatting (ref `io.py:21-29`). */
   val nodeIdUdf = udf((lon: Double, lat: Double, p: Int) => Geo.nodeId(lon, lat, p))
 

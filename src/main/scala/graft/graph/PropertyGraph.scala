@@ -13,9 +13,11 @@ import graft.route.GraphIndex
   * (`geopackagenetwork/__init__.py:9-85`,
   * `graphs/digraphdb/__init__.py:16-167`).
   *
-  * Invariants (maintained by construction, as in the reference):
-  *  - `edges(_u, _v)` unique — upserts are last-wins on that key
-  *    (`feature_table.py:601-613`);
+  * Invariants:
+  *  - `edges(_u, _v)` is last-wins only between [[addEdges]] batches
+  *    (`feature_table.py:601-613`), which leave one row per key; ingest
+  *    does not dedup (`fromGeoJson` keeps one row per feature, so two
+  *    features between the same endpoints give two rows per direction);
   *  - `nodes(_n)` unique, derived from edge endpoints
   *    (`edge_table.py:5-33`).
   *

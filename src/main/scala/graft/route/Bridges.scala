@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *    to local Tarjan on fixtures and random graphs.
   *
   * Distributed cost shape: forest = Borůvka (O(log V) shuffle rounds);
-  * rooting = one BFS over forest edges (O(tree depth) rounds, each a
-  * frontier join — same round structure as the Pregel SSSP); subtree
+  * rooting = one BFS over forest edges ([[Frontier.relax]]: O(tree depth)
+  * rounds, each a frontier join, as in the Pregel SSSP); subtree
   * XOR = one upward sweep, processing depths bottom-up with a
   * `bit_xor` partial aggregation per level (map-side combinable, one
   * narrow shuffle per level). State per round is one row per node —
@@ -61,17 +61,21 @@ object Bridges {
       maxLocalEdges: Long = Route.LocalPathMaxEdges,
       maxDepth: Int = 512, tagSalt: Long = 0L): DataFrame = {
     import spark.implicits._
-    val canon = edges.select(
-        least(col("u").cast("long"), col("v").cast("long")).as("u"),
-        greatest(col("u").cast("long"), col("v").cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonical(edges)
     if (Route.fitsLocally(canon, maxLocalEdges)) {
       val es = canon.as[(Long, Long)].collect()
       return bridgesLocal(es).toSeq.toDF("u", "v")
     }
     bridgesDistributed(spark, canon, maxDepth, tagSalt)
   }
+
+  /** Distinct (u, v) long pairs with u < v; self-loops dropped. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.select(
+        least(col("u").cast("long"), col("v").cast("long")).as("u"),
+        greatest(col("u").cast("long"), col("v").cast("long")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
 
   /** 2-edge-connected components: the equivalence classes left when every
     * bridge is removed (nx `k_edge_components(k=2)` modulo singleton
@@ -87,13 +91,7 @@ object Bridges {
   def twoEdgeConnectedComponents(spark: SparkSession, edges: DataFrame,
       maxLocalEdges: Long = Route.LocalPathMaxEdges,
       maxDepth: Int = 512): DataFrame = {
-    import spark.implicits._
-    val canon = edges.select(
-        least(col("u").cast("long"), col("v").cast("long")).as("u"),
-        greatest(col("u").cast("long"), col("v").cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+    val canon = canonical(edges).localCheckpoint()
     val br = bridges(spark, canon, maxLocalEdges, maxDepth)
     val nb = canon.join(br, Seq("u", "v"), "left_anti")
     val nodes = canon.select(col("u").as("node"))
@@ -176,34 +174,21 @@ object Bridges {
     val sym = forest.select(col("u").as("a"), col("v").as("b"))
       .union(forest.select(col("v").as("a"), col("u").as("b")))
       .localCheckpoint()
-    val allNodes = canon.select(col("u").as("node"))
-      .union(canon.select(col("v"))).distinct()
-    // min-node roots: a node is a root iff no smaller node reaches it —
-    // cheapest correct choice: GraphX CC labels each node with the min
-    // member, roots are the nodes equal to their label
+    // roots are the min nodes of the trees (FastCC's min-member labels);
+    // the forest spans every endpoint, as Borůvka ran to convergence. The
+    // label (depth, parent) under min: each round reaches the next level,
+    // whose min parent wins; a visited node is never improved on.
     val cc = graft.graph.FastCC.labels(
       forest.select(col("u"), col("v")), "node", "comp")
-    var frontier = cc.filter(col("node") === col("comp"))
-      .select(col("node"), lit(null).cast("long").as("parent"),
-        lit(0).as("depth"))
-      .union(allNodes.join(cc, Seq("node"), "left_anti")
-        .select(col("node"), lit(null).cast("long").as("parent"), lit(0).as("depth")))
-      .localCheckpoint()
-    var visited = frontier
-    var d = 0
-    var growing = true
-    while (growing && d < maxDepth) {
-      val next = sym.join(frontier.select(col("node").as("a")), "a")
-        .select(col("b").as("node"), col("a").as("parent"))
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .groupBy("node").agg(min("parent").as("parent"))
-        .withColumn("depth", lit(d + 1))
-        .localCheckpoint()
-      if (next.isEmpty) growing = false
-      else { visited = visited.union(next).localCheckpoint(); frontier = next }
-      d += 1
+    val bfs = Frontier.relax(cc.filter(col("node") === col("comp")).select(col("node"),
+        struct(lit(0).as("depth"), lit(null).cast("long").as("parent")).as("label")),
+        maxDepth, minimize = true) { frontier =>
+      sym.join(frontier.select(col("node").as("a"), col("label.depth")), "a")
+        .select(col("b").as("node"),
+          struct((col("depth") + 1).as("depth"), col("a").as("parent")).as("label"))
     }
-    require(!growing,
+    Frontier.release(sym)
+    require(bfs.converged,
       s"bridges: tree depth exceeds maxDepth=$maxDepth — contract the graph first")
 
     // 3. vertex values: XOR of non-tree incident tags; subtree sweep up.
@@ -217,18 +202,21 @@ object Bridges {
     val vertexVal = tagged.select(col("u").as("node"), col("tag"))
       .union(tagged.select(col("v"), col("tag")))
       .groupBy("node").agg(expr("bit_xor(tag)").as("own"))
-    var acc = visited.join(vertexVal, Seq("node"), "left")
-      .select(col("node"), col("parent"), col("depth"),
+    var acc = bfs.best.join(vertexVal, Seq("node"), "left")
+      .select(col("node"), col("label.parent").as("parent"), col("label.depth").as("depth"),
         coalesce(col("own"), lit(0L)).as("acc"))
       .localCheckpoint()
-    var lvl = d
+    Frontier.release(bfs.best)
+    var lvl = bfs.rounds
     while (lvl >= 1) {
       val contrib = acc.filter(col("depth") === lvl && col("parent").isNotNull)
         .groupBy(col("parent").as("node")).agg(expr("bit_xor(acc)").as("up"))
-      acc = acc.join(contrib, Seq("node"), "left")
+      val next = acc.join(contrib, Seq("node"), "left")
         .select(col("node"), col("parent"), col("depth"),
           expr("acc ^ coalesce(up, cast(0 as bigint))").as("acc"))
         .localCheckpoint()
+      Frontier.release(acc)
+      acc = next
       lvl -= 1
     }
     acc.filter(col("parent").isNotNull && col("acc") === 0L)

@@ -15,12 +15,8 @@ import org.apache.spark.sql.functions._
   *    every edge ascending, processing edges in increasing `u` order sees
   *    each node's final distance before any of its out-edges — exact in
   *    O(E log E) (the sort) with zero iteration.
-  *  - Above it, frontier Bellman relaxation: only nodes whose distance
-  *    improved propagate next round; each round is one join on the edge
-  *    key + one max partial agg, state one row per node, `depth` rounds
-  *    total. The driver-side loop materializes two frames per round
-  *    (frontier, best) and releases the previous round's cache, so a
-  *    deep DAG does not accumulate executor memory.
+  *  - Above it, max-plus [[Frontier.relax]] with every node seeded at 0:
+  *    `depth` rounds, each one join on the edge key + one max aggregate.
   *
   * At 100 TB the intended pattern is the one the registry query shows:
   * contract the raw graph to supernodes first, THEN take paths — the
@@ -42,7 +38,7 @@ object DagPath {
       val es = canon.as[(Long, Long)].collect()
       return longestPathLocal(es).toSeq.toDF("node", "dist")
     }
-    longestPathDistributed(spark, canon, maxRounds)
+    longestPathDistributed(canon, maxRounds)
   }
 
   /** One ascending sweep: u < v means dist(u) is final when its
@@ -59,37 +55,17 @@ object DagPath {
   }
 
   /** Frontier relaxation (see object doc). */
-  private def longestPathDistributed(spark: SparkSession, canon: DataFrame,
-      maxRounds: Int): DataFrame = {
+  private def longestPathDistributed(canon: DataFrame, maxRounds: Int): DataFrame = {
     val edges = canon.localCheckpoint()
     val nodes = edges.select(col("u").as("node"))
       .union(edges.select(col("v"))).distinct()
-    var best = nodes.withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = best
-    var rounds = 0
-    var live = true
-    while (rounds < maxRounds && live) {
-      val cand = frontier.join(edges, frontier("node") === edges("u"))
-        .select(col("v").as("node"), (col("dist") + 1L).as("nd"))
-        .groupBy("node").agg(max("nd").as("nd"))
-      val improved = cand.join(best, "node")
-        .filter(col("nd") > col("dist"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint()
-      if (improved.isEmpty) live = false
-      else {
-        val prev = best
-        best = best.join(improved.select(col("node"), col("dist").as("nd")),
-            Seq("node"), "left")
-          .select(col("node"), coalesce(col("nd"), col("dist")).as("dist"))
-          .localCheckpoint()
-        prev.unpersist(blocking = false)
-        frontier.unpersist(blocking = false)
-        frontier = improved
-      }
-      rounds += 1
+    val r = Frontier.relax(nodes.withColumn("dist", lit(0L)), maxRounds,
+        minimize = false) { frontier =>
+      frontier.join(edges, frontier("node") === edges("u"))
+        .select(col("v").as("node"), (col("dist") + 1L).as("dist"))
     }
-    require(!live, s"longestPath: DAG deeper than $maxRounds rounds")
-    best
+    Frontier.release(edges)
+    require(r.converged, s"longestPath: DAG deeper than $maxRounds rounds")
+    r.best
   }
 }

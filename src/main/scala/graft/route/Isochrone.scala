@@ -15,12 +15,10 @@ import org.apache.spark.sql.functions._
   *    the cutoff, on a [[GraphIndex]] built from the collected rows — the
   *    frontier never leaves the walkshed, so search cost is proportional
   *    to the reachable subgraph, not the whole graph.
-  *  - Above it, bounded frontier relaxation: per round one join of the
-  *    improved frontier against the symmetric edge relation + a min
-  *    partial agg, discarding candidates beyond the cutoff BEFORE the
-  *    shuffle (the cutoff is the pruning predicate, applied map-side).
-  *    With positive weights the round count is bounded by
-  *    cutoff / min(weight); state is one row per reached node.
+  *  - Above it, min-plus [[Frontier.relax]] over the symmetric edge
+  *    relation, dropping candidates beyond the cutoff map-side, before the
+  *    min aggregate's shuffle. With positive weights the round count is
+  *    bounded by cutoff / min(weight).
   *
   * At 100 TB the isochrone is frontier-local by nature — the cutoff
   * bounds the touched subgraph regardless of graph size, which is what
@@ -62,38 +60,15 @@ object Isochrone {
     val sym = canon.select(col("u").as("a"), col("v").as("b"), col("w"))
       .union(canon.select(col("v").as("a"), col("u").as("b"), col("w")))
       .localCheckpoint()
-    var best = Seq((source, 0.0)).toDF("node", "dist").localCheckpoint()
-    var frontier = best
-    var rounds = 0
-    var live = true
-    while (rounds < maxRounds && live) {
-      val cand = frontier.join(sym, frontier("node") === sym("a"))
-        .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-        .filter(col("nd") <= cutoff) // map-side cutoff prune
-        .groupBy("node").agg(min("nd").as("nd"))
-      val improved = cand.join(best.select(col("node"), col("dist").as("old")),
-          Seq("node"), "left")
-        .filter(col("old").isNull || col("nd") < col("old"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint()
-      if (improved.isEmpty) live = false
-      else {
-        val prev = best
-        best = best.join(improved.select(col("node"), col("dist").as("nd")),
-            Seq("node"), "full_outer")
-          .select(col("node"),
-            when(col("nd").isNull, col("dist"))
-              .when(col("dist").isNull, col("nd"))
-              .otherwise(least(col("dist"), col("nd"))).as("dist"))
-          .localCheckpoint()
-        prev.unpersist(blocking = false)
-        frontier.unpersist(blocking = false)
-        frontier = improved
-      }
-      rounds += 1
+    val r = Frontier.relax(Seq((source, 0.0)).toDF("node", "dist"), maxRounds,
+        minimize = true) { frontier =>
+      frontier.join(sym, frontier("node") === sym("a"))
+        .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
+        .filter(col("dist") <= cutoff) // map-side cutoff prune
     }
-    require(!live, s"isochrone: no convergence in $maxRounds rounds " +
+    Frontier.release(sym)
+    require(r.converged, s"isochrone: no convergence in $maxRounds rounds " +
       "(zero-weight cycle?)")
-    best
+    r.best
   }
 }

@@ -32,7 +32,8 @@ object Mst {
 
   /** Minimum spanning forest of `edges` — columns (u: long, v: long,
     * w: double), each undirected edge listed once ((u, v) unique; self
-    * loops ignored). Returns the chosen edges as (u, v, w).
+    * loops ignored). Returns the chosen edges as (u, v, w); fails when
+    * Borůvka has not converged within `maxRounds` rounds.
     */
   def minimumSpanningForest(spark: SparkSession, edges: DataFrame,
       maxLocalEdges: Long = Route.LocalPathMaxEdges,
@@ -111,6 +112,7 @@ object Mst {
       }
       round += 1
     }
+    require(done, s"minimumSpanningForest: no convergence in $maxRounds rounds")
     forest
   }
 }

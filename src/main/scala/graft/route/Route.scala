@@ -111,31 +111,15 @@ private[route] object DeltaVec {
   val empty = new DeltaVec(Array.emptyIntArray, Array.emptyDoubleArray)
 
   /** per-source sum over two sorted vectors (merge-join) */
-  def merge(a: DeltaVec, b: DeltaVec): DeltaVec = {
-    if (a.idx.length == 0) return b
-    if (b.idx.length == 0) return a
-    val n = a.idx.length + b.idx.length
-    val oi = new Array[Int](n)
-    val od = new Array[Double](n)
-    var i = 0; var j = 0; var k = 0
-    while (i < a.idx.length && j < b.idx.length) {
-      val ai = a.idx(i); val bj = b.idx(j)
-      if (ai < bj) { oi(k) = ai; od(k) = a.del(i); i += 1 }
-      else if (bj < ai) { oi(k) = bj; od(k) = b.del(j); j += 1 }
-      else { oi(k) = ai; od(k) = a.del(i) + b.del(j); i += 1; j += 1 }
-      k += 1
-    }
-    while (i < a.idx.length) { oi(k) = a.idx(i); od(k) = a.del(i); i += 1; k += 1 }
-    while (j < b.idx.length) { oi(k) = b.idx(j); od(k) = b.del(j); j += 1; k += 1 }
-    if (k == n) new DeltaVec(oi, od)
-    else new DeltaVec(java.util.Arrays.copyOf(oi, k), java.util.Arrays.copyOf(od, k))
-  }
+  def merge(a: DeltaVec, b: DeltaVec): DeltaVec = mergeJoin(a, b, sum = true)
 
-  /** per-key MINIMUM over two sorted vectors (merge-join) — the landmark-
-    * distance combiner ([[Route.landmarkDistances]]); same layout as
-    * [[merge]], min instead of sum on overlapping keys.
+  /** per-key MINIMUM over two sorted vectors — the landmark-distance
+    * combiner ([[Route.landmarkDistances]]); min instead of sum on
+    * overlapping keys.
     */
-  def minMerge(a: DeltaVec, b: DeltaVec): DeltaVec = {
+  def minMerge(a: DeltaVec, b: DeltaVec): DeltaVec = mergeJoin(a, b, sum = false)
+
+  private def mergeJoin(a: DeltaVec, b: DeltaVec, sum: Boolean): DeltaVec = {
     if (a.idx.length == 0) return b
     if (b.idx.length == 0) return a
     val n = a.idx.length + b.idx.length
@@ -146,7 +130,11 @@ private[route] object DeltaVec {
       val ai = a.idx(i); val bj = b.idx(j)
       if (ai < bj) { oi(k) = ai; od(k) = a.del(i); i += 1 }
       else if (bj < ai) { oi(k) = bj; od(k) = b.del(j); j += 1 }
-      else { oi(k) = ai; od(k) = math.min(a.del(i), b.del(j)); i += 1; j += 1 }
+      else {
+        oi(k) = ai
+        od(k) = if (sum) a.del(i) + b.del(j) else math.min(a.del(i), b.del(j))
+        i += 1; j += 1
+      }
       k += 1
     }
     while (i < a.idx.length) { oi(k) = a.idx(i); od(k) = a.del(i); i += 1; k += 1 }
@@ -578,12 +566,9 @@ object Route {
     * floor `resetProb` from round 1 on). Each round is one co-partitioned
     * join on `src` plus one aggregation on `dst` — no global ordering
     * anywhere, so the plan scales with the shuffle, and AQE is free to
-    * re-plan each round. The loop deliberately holds NO persisted state
-    * (a localCheckpoint per call would strand unreleasable blocks for the
-    * session's lifetime — the leak class the j12 cache fix removed); at
-    * real scale persist `edges` yourself and cut lineage every ~10 rounds
-    * with an explicit checkpoint dir, or use the GraphX [[pageRank]] path
-    * whose Pregel loop manages its own persistence.
+    * re-plan each round. The loop holds no persisted state: at real scale
+    * persist `edges` yourself and cut lineage every ~10 rounds, or use the
+    * GraphX [[pageRank]] path, whose Pregel loop manages its own.
     *
     * Determinism note: per-node contributions are summed in shuffle
     * arrival order, so ranks are reproducible bitwise only where every
@@ -591,26 +576,8 @@ object Route {
     * r4 oracle query runs on a chain precisely so the gate is bit-exact.
     */
   def pageRankStatic(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      iters: Int, resetProb: Double = 0.15): DataFrame = {
-    require(iters >= 0, s"iters must be non-negative, got $iters")
-    require(resetProb > 0 && resetProb < 1, s"resetProb in (0,1), got $resetProb")
-    val damp = 1.0 - resetProb
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("_od"))
-    val contribEdges = edges.join(outDeg, "src")
-    var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val contribs = contribEdges
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), (col("rank") / col("_od")).as("_c"))
-        .groupBy("dst").agg(sum("_c").as("_csum"))
-      ranks = nodes
-        .join(contribs, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(resetProb) + lit(damp) * coalesce(col("_csum"), lit(0.0)))
-            .as("rank"))
-    }
-    ranks
-  }
+      iters: Int, resetProb: Double = 0.15): DataFrame =
+    powerIteration(edges, iters, resetProb)(nodes.select(col("node"), lit(1.0).as("_e")))
 
   /** PERSONALIZED PageRank — random walk with restart to a seed set:
     * r⁰ = 1_seeds/|seeds|;  rᵗ⁺¹ = ρ·1_seeds/|seeds| + (1−ρ)·AᵀD⁻¹rᵗ.
@@ -627,17 +594,28 @@ object Route {
     */
   def personalizedPageRank(spark: SparkSession, nodes: DataFrame,
       edges: DataFrame, seeds: DataFrame, iters: Int,
-      resetProb: Double = 0.15): DataFrame = {
+      resetProb: Double = 0.15): DataFrame =
+    powerIteration(edges, iters, resetProb) {
+      val nSeeds = seeds.select(col("node")).distinct().count()
+      require(nSeeds > 0, "personalizedPageRank needs at least one seed")
+      val seedMass = nodes
+        .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
+        .select(col("node"), (lit(1.0) / lit(nSeeds.toDouble)).as("_e"))
+      nodes.join(seedMass, Seq("node"), "left")
+        .select(col("node"), coalesce(col("_e"), lit(0.0)).as("_e"))
+    }
+
+  /** The power iteration both PageRank forms share: ranks start at the
+    * restart mass `_e` of each (`node`, `_e`) row of `restart` and each
+    * round become `resetProb·_e + (1-resetProb)·Σ rank(u)/outdeg(u)`.
+    * `restart` is evaluated after the argument checks.
+    */
+  private def powerIteration(edges: DataFrame, iters: Int, resetProb: Double)(
+      restart: => DataFrame): DataFrame = {
     require(iters >= 0, s"iters must be non-negative, got $iters")
     require(resetProb > 0 && resetProb < 1, s"resetProb in (0,1), got $resetProb")
+    val base = restart
     val damp = 1.0 - resetProb
-    val nSeeds = seeds.select(col("node")).distinct().count()
-    require(nSeeds > 0, "personalizedPageRank needs at least one seed")
-    val seedMass = nodes
-      .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
-      .select(col("node"), (lit(1.0) / lit(nSeeds.toDouble)).as("_e"))
-    val base = nodes.join(seedMass, Seq("node"), "left")
-      .select(col("node"), coalesce(col("_e"), lit(0.0)).as("_e"))
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("_od"))
     val contribEdges = edges.join(outDeg, "src")
     var ranks = base.select(col("node"), col("_e").as("rank"))

@@ -59,16 +59,11 @@ object Spatial {
         array(lit(CatchAllCell)))))
   }
 
+  /** An envelope's `_cell` ids: the catch-all alone past [[MaxCellsPerEdge]]. */
   private[graft] def coveredCells(minX: Double, minY: Double,
-      maxX: Double, maxY: Double, cellDeg: Double): Seq[Long] = {
-    val r0 = math.floor((minY + 90.0) / cellDeg).toLong
-    val r1 = math.floor((maxY + 90.0) / cellDeg).toLong
-    val c0 = math.floor((minX + 180.0) / cellDeg).toLong
-    val c1 = math.floor((maxX + 180.0) / cellDeg).toLong
-    val n = (r1 - r0 + 1) * (c1 - c0 + 1)
-    if (n <= 0 || n > MaxCellsPerEdge) Seq(CatchAllCell)
-    else for (r <- r0 to r1; c <- c0 to c1) yield r * 100000L + c
-  }
+      maxX: Double, maxY: Double, cellDeg: Double): Array[Long] =
+    GeoFunctions.gridCells(minX, minY, maxX, maxY, cellDeg, MaxCellsPerEdge)
+      .getOrElse(Array(CatchAllCell))
 
   /** Reference-point duplicate avoidance (Dittrich and Seeger, ICDE 2000):
     * keep the copy whose `_cell` holds (x, y), a point in the edge's
@@ -82,18 +77,13 @@ object Spatial {
     else edges.withColumn(BBoxCol, GeoFunctions.envelope(col("geom.coordinates")))
 
   /** Grid cells overlapping a query bbox (plus the catch-all cell for
-    * geometries too large to duplicate).
+    * geometries too large to duplicate); None past 4,096 cells, where a
+    * scan beats the `isin`.
     */
   private[graft] def cellsFor(left: Double, bottom: Double, right: Double,
-      top: Double, cellDeg: Double): Option[Seq[Long]] = {
-    val r0 = math.floor((bottom + 90.0) / cellDeg).toLong
-    val r1 = math.floor((top + 90.0) / cellDeg).toLong
-    val c0 = math.floor((left + 180.0) / cellDeg).toLong
-    val c1 = math.floor((right + 180.0) / cellDeg).toLong
-    val n = (r1 - r0 + 1) * (c1 - c0 + 1)
-    if (n <= 0 || n > 4096) None // huge box: scan beats an isin of 4k+ cells
-    else Some((for (r <- r0 to r1; c <- c0 to c1) yield r * 100000L + c) :+ CatchAllCell)
-  }
+      top: Double, cellDeg: Double): Option[Seq[Long]] =
+    GeoFunctions.gridCells(left, bottom, right, top, cellDeg, 4096)
+      .map(cells => (cells :+ CatchAllCell).toSeq)
 
   /** Features whose MBR intersects the bbox (ref `feature_table.py:120-162`).
     * When the frame carries the `_cell` partition column, a derived

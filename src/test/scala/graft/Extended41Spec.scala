@@ -49,6 +49,20 @@ class Extended41Spec extends AnyFunSuite {
     assert(dist == local)
   }
 
+  test("Borůvka fails with the round cap instead of returning a partial forest") {
+    import spark.implicits._
+    // path 1-2-...-8 weighted 1,2,1,2,1,2,1: round 1 merges the four
+    // weight-1 pairs, round 2 joins them, round 3 finds nothing crossing
+    val path = (1L to 7L).map(u => (u, u + 1, if (u % 2 == 1) 1.0 else 2.0))
+      .toDF("u", "v", "w")
+    val err = intercept[IllegalArgumentException] {
+      Mst.minimumSpanningForest(spark, path, maxLocalEdges = 0, maxRounds = 1)
+    }
+    assert(err.getMessage.contains("no convergence in 1 rounds"))
+    assert(forestSet(Mst.minimumSpanningForest(spark, path, maxLocalEdges = 0,
+      maxRounds = 3)).size == 7)
+  }
+
   test("weighted median selects the exact cumulative-threshold value") {
     import spark.implicits._
     // values 10 (w=1), 20 (w=2), 30 (w=3): total 6, first value with

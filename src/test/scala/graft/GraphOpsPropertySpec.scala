@@ -138,6 +138,10 @@ class GraphOpsPropertySpec extends AnyFunSuite {
           Bridges.bridges(spark, df, maxLocalEdges = 0).collect()
             .map(r => (r.getLong(0), r.getLong(1))).toSet ==
           Bridges.bridgesLocal(edges).toSet)
+        assert(
+          DagPath.longestPath(spark, df, maxLocalEdges = 0).collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+          DagPath.longestPathLocal(edges).toSet)
         val wdf = edges.toSeq.map { case (u, v) => (u, v, 1.0 + (u + v) % 3) }
           .toDF("u", "v", "w")
         val warr = edges.map { case (u, v) => (u, v, 1.0 + (u + v) % 3) }
